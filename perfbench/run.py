@@ -107,9 +107,11 @@ def run_jvm(main_args):
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     cp = CLASSES + os.pathsep + os.path.join(SPARK_JARS, "*")
+    # ParallelGC: a batch job's throughput collector; G1's concurrent threads
+    # compete with Spark's for the few vCPUs.
     cmd = (["java"]
            + [a for p in ADD_OPENS for a in ("--add-opens", p + "=ALL-UNNAMED")]
-           + ["-Xmx%dg" % heap_gb(), "-Djava.io.tmpdir=" + tmp,
+           + ["-Xmx%dg" % heap_gb(), "-XX:+UseParallelGC", "-Djava.io.tmpdir=" + tmp,
               "-Dspark.ui.enabled=false", "-cp", cp, "perfbench.Main"]
            + main_args)
     log = os.path.join(BUILD, "jvm.log")

@@ -6,9 +6,9 @@ import scala.collection.immutable.ListMap
 
 /** One benchmark run in one JVM: set up a workload's inputs (several times,
   * for `setup_s`), warm up with one untimed operation, then run operations
-  * back to back (a closed loop, one job at a time) for `--seconds`, and check
-  * the last operation's output. With `--trace 1` the run instead records
-  * per-layer spans and Spark counters.
+  * back to back (a closed loop, one job at a time) for `--seconds` and at
+  * least [[MinOps]] times, and check the last operation's output. With
+  * `--trace 1` the run instead records per-layer spans and Spark counters.
   *
   * Prints human-readable lines, then as its last line one JSON object with
   * `correct`, `attempted`, `failed` and the computed `metrics` (name → value);
@@ -17,7 +17,10 @@ import scala.collection.immutable.ListMap
   */
 object Main {
   val SetupReps = 3
-  val TraceReps = 1
+  /** Timed operations per run whatever `--seconds` says, so `op_cpu_s` is a
+    * median even when one operation outlasts the window.
+    */
+  val MinOps = 3
 
   def main(args: Array[String]): Unit = {
     val opts = args.grouped(2).collect { case Array(k, v) => k -> v }.toMap
@@ -40,21 +43,20 @@ object Main {
     try {
       val w = Workloads(workload, new Ctx(spark, work, seed, cpus))
       val setups = (1 to SetupReps).map { i =>
-        val r = time(w.setup())
-        log(f"setup $i: ${r._2}%.3f s")
+        val r = measure(w.setup())
+        log(f"setup $i: ${r.wallS}%.3f s wall, ${r.cpuS}%.3f s cpu")
         r
       }
-      val inputs = setups.last._1
+      val inputs = setups.last.out
       var attempted = 0L
       var failed = 0L
-      val ops = scala.collection.mutable.ArrayBuffer.empty[(OpOut, Double)]
+      val ops = scala.collection.mutable.ArrayBuffer.empty[Measured[OpOut]]
       def attempt(): Unit = {
-        val t0 = System.nanoTime()
         try {
-          val o = w.op(None)
-          ops += ((o, (System.nanoTime() - t0) / 1e9))
-          log(f"op: ${ops.last._2}%.3f s ${o.named}")
-          attempted += o.units
+          val m = measure(w.op(None))
+          ops += m
+          log(f"op: ${m.wallS}%.3f s wall, ${m.cpuS}%.3f s cpu ${m.out.named}")
+          attempted += m.out.units
         } catch {
           case e: Exception =>
             log(s"operation failed: $e")
@@ -65,13 +67,21 @@ object Main {
       attempt() // warm-up: JIT, codegen and broadcast set-up are not timed
       ops.clear(); attempted = failed // a failed warm-up still counts as failed
       val t0 = System.nanoTime()
+      val cpu0 = cpuTicks
       if (traced) attempt()
-      else while (ops.isEmpty && failed == 0 || (System.nanoTime() - t0) / 1e9 < seconds) attempt()
+      else {
+        var n = 0
+        while (n < MinOps || (System.nanoTime() - t0) / 1e9 < seconds) { attempt(); n += 1 }
+      }
       val untracedOps = ops.toSeq
+      val stealFrac = {
+        val ((steal0, total0), (steal1, total1)) = (cpu0, cpuTicks)
+        (steal1 - steal0).toDouble / math.max(1L, total1 - total0)
+      }
 
       val layers = if (!traced) None else {
         val tracer = new Tracer(spark)
-        val l = try w.trace(tracer, TraceReps) finally tracer.stop()
+        val l = try w.trace(tracer) finally tracer.stop()
         Some((l, tracer))
       }
 
@@ -85,20 +95,23 @@ object Main {
       failed += checks.map(_.failed).sum
       val correct = failed == 0 && untracedOps.nonEmpty
 
-      val opSeconds = untracedOps.map(_._2)
-      val setupS = Workloads.medianOf(setups.map(_._2))
+      val opWall = Workloads.medianOf(untracedOps.map(_.wallS))
+      val opCpu = Workloads.medianOf(untracedOps.map(_.cpuS))
+      val setupS = Workloads.medianOf(setups.map(_.cpuS))
       val metrics: Seq[(String, Double)] = layers match {
-        case None => Seq("op_s" -> Workloads.medianOf(opSeconds), "setup_s" -> setupS)
+        case None => Seq("op_cpu_s" -> opCpu, "setup_s" -> setupS)
         case Some((l, _)) =>
-          val untracedWall = Workloads.medianOf(opSeconds)
+          val untracedWall = opWall
           l.self ++ l.other ++ Seq("trace.wall_s" -> l.wall,
             "trace.unattributed_s" -> (l.wall - l.self.map(_._2).sum),
             "trace.overhead_frac" -> (l.wall / untracedWall - 1.0))
       }
-      val named = namedMetrics(workload, untracedOps, setupS)
+      val named = namedMetrics(workload, untracedOps,
+        Workloads.medianOf(setups.map(_.wallS)))
 
       val host = ListMap(
         "nproc" -> cpus, "load1_start" -> load0, "load1_end" -> loadAvg,
+        "cpu_steal_frac_timed" -> stealFrac,
         "heap_max_mb" -> Runtime.getRuntime.maxMemory / (1 << 20),
         "spark_conf" -> ListMap(spark.conf.getAll.toSeq.filter(_._1.startsWith("spark.sql.")).sorted: _*),
         "spark_master" -> spark.sparkContext.master,
@@ -110,7 +123,8 @@ object Main {
         "workload" -> workload, "seed" -> seed, "seconds" -> seconds, "trace" -> traced,
         "correct" -> correct, "attempted" -> attempted, "failed" -> failed,
         "inputs" -> inputs, "host" -> host,
-        "setup_s_samples" -> setups.map(_._2), "op_s_samples" -> opSeconds,
+        "setup_wall_s_samples" -> setups.map(_.wallS), "setup_cpu_s_samples" -> setups.map(_.cpuS),
+        "op_wall_s_samples" -> untracedOps.map(_.wallS), "op_cpu_s_samples" -> untracedOps.map(_.cpuS),
         "named_metrics" -> ListMap(named: _*), "metrics" -> ListMap(metrics: _*),
         "checks" -> checks.map(ch => ListMap("name" -> ch.name, "items" -> ch.items,
           "failed" -> ch.failed, "detail" -> ch.detail)),
@@ -123,7 +137,7 @@ object Main {
       Files.writeString(file, Json.render(result) + "\n")
 
       println(s"workload $workload seed $seed: ${untracedOps.size} timed operations, " +
-        f"op_s median ${Workloads.medianOf(opSeconds)}%.3f")
+        f"median ${opWall}%.3f s wall, ${opCpu}%.3f s cpu")
       named.foreach { case (n, v) => println(f"named $n%-28s $v%.4f") }
       checks.foreach(ch => println(s"check ${if (ch.ok) "ok  " else "FAIL"} ${ch.name}: ${ch.detail}"))
       println(s"result file $file")
@@ -135,17 +149,19 @@ object Main {
     }
   }
 
-  /** Per-workload throughputs and the peak RSS, for the result file. They
-    * are not gated: the rates restate `op_s` per work unit, and peak RSS
-    * follows GC timing too closely to bound run to run.
+  /** Wall-clock figures, per-workload throughputs and the peak RSS, for the
+    * result file. They are not gated: wall time on a shared VM swings with
+    * hypervisor steal, the rates restate the operation time per work unit,
+    * and peak RSS follows GC timing too closely to bound run to run.
     */
-  private def namedMetrics(workload: String, ops: Seq[(OpOut, Double)],
-      setupS: Double): Seq[(String, Double)] = {
+  private def namedMetrics(workload: String, ops: Seq[Measured[OpOut]],
+      setupWallS: Double): Seq[(String, Double)] = {
     val rate = if (workload == "pip_tile") Seq("images_per_s") else Nil
-    val keys = ops.headOption.toSeq.flatMap(_._1.named.keys).sorted
-    rate.map(_ -> Workloads.medianOf(ops.map { case (o, s) => o.items / s })) ++
-      keys.map(k => k -> Workloads.medianOf(ops.map(_._1.named(k)))) ++
-      Seq("setup_s" -> setupS, "peak_rss_mb" -> peakRssMb)
+    val keys = ops.headOption.toSeq.flatMap(_.out.named.keys).sorted
+    Seq("op_wall_s" -> Workloads.medianOf(ops.map(_.wallS))) ++
+      rate.map(_ -> Workloads.medianOf(ops.map(m => m.out.items / m.wallS))) ++
+      keys.map(k => k -> Workloads.medianOf(ops.map(_.out.named(k)))) ++
+      Seq("setup_wall_s" -> setupWallS, "peak_rss_mb" -> peakRssMb)
   }
 
   /** The benchmark's one session: local[cpus], AQE on, UTC, writes kept
@@ -176,10 +192,39 @@ object Main {
   private def uptime: Double =
     java.lang.management.ManagementFactory.getRuntimeMXBean.getUptime / 1e3
 
+  final case class Measured[A](out: A, wallS: Double, cpuS: Double)
+
+  /** Wall and CPU seconds of `body`. CPU seconds are summed over the JVM's
+    * Java threads (Spark driver, scheduler and task threads); they leave out
+    * the JIT compiler and GC threads, whose work shifts from run to run, and,
+    * with the kernel's paravirtual time accounting, the time the hypervisor
+    * gave the vCPUs to other machines (steal), which makes wall time on a
+    * shared VM swing by half. A thread that ends inside `body` loses its CPU
+    * time; Spark's pools keep theirs alive for a minute.
+    */
+  def measure[A](body: => A): Measured[A] = {
+    val (t0, c0) = (System.nanoTime(), javaCpuS)
+    val a = body
+    Measured(a, (System.nanoTime() - t0) / 1e9, javaCpuS - c0)
+  }
+
+  private def javaCpuS: Double = {
+    val tm = java.lang.management.ManagementFactory.getThreadMXBean
+    tm.getAllThreadIds.map(tm.getThreadCpuTime).filter(_ > 0).sum / 1e9
+  }
+
   def time[A](body: => A): (A, Double) = {
     val t0 = System.nanoTime()
     val a = body
     (a, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** (steal, total) jiffies of all CPUs: the share of time the hypervisor
+    * gave the VM's vCPUs to other machines.
+    */
+  private def cpuTicks: (Long, Long) = {
+    val f = Files.readAllLines(Paths.get("/proc/stat")).get(0).trim.split("\\s+").drop(1).map(_.toLong)
+    (if (f.length > 7) f(7) else 0L, f.sum)
   }
 
   private def loadAvg: Double =

@@ -3,14 +3,15 @@ package perfbench
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.cell.CellIndex
-import graft.emit.BoundaryWriter
+import graft.emit.{BoundaryWriter, Emitters}
 import graft.fixtures.OsmScenes
 import graft.functions.GraftFunctions
 import graft.geom.{Geom, PolygonRow}
 import graft.img.{IcebergShaped, ImageTable}
 import graft.graph.Bfs
-import graft.join.{Knn, SpatialJoin}
+import graft.join.SpatialJoin
 import graft.osm.BoundaryExtract
 import graft.osm.pbf.PbfSource
 import graft.tile.{TileManifest, Tiling}
@@ -23,7 +24,7 @@ final class Ctx(val spark: SparkSession, val work: Path, val seed: Long, val cpu
 }
 
 /** One timed operation's result. `items` is the work unit of the workload's
-  * throughput (images, points+probes, relations, loop queries); `units` the
+  * throughput (images, relations); `units` the
   * operations it counts toward `attempted` (tile batches, jobs, sink files,
   * loop queries); `named` the issue-named figures it yields.
   */
@@ -53,8 +54,8 @@ abstract class Workload(val c: Ctx) {
     * mutated output; the self-test expects every one of them to fail.
     */
   def mutatedChecks(): Seq[(String, () => Seq[Check])]
-  /** Per-layer self times and counts, from `reps` traced repetitions. */
-  def trace(t: Tracer, reps: Int): Layers
+  /** Per-layer self times and counts, from one traced repetition. */
+  def trace(t: Tracer): Layers
 
   protected def span[A](t: Option[Tracer], name: String)(body: => A): A =
     t.fold(body)(_.span(name)(body)._1)
@@ -99,14 +100,6 @@ object Workloads {
     probes.select(explode(array(resList.map(r =>
         GraftFunctions.cellOfCol(col(latCol), col(lonCol), r)): _*)).as("cell"))
       .join(broadcast(cells.toDF().select("cell")), "cell").count()
-  }
-
-  /** Layer self times from nested prefixes: the time of prefix k minus the
-    * time of prefix k-1 (medians over repetitions).
-    */
-  def selfTimes(prefixes: Seq[(String, Seq[Double])]): Seq[(String, Double)] = {
-    val meds = prefixes.map { case (n, xs) => n -> medianOf(xs) }
-    meds.zip(0.0 +: meds.map(_._2)).map { case ((n, m), prev) => n -> (m - prev) }
   }
 }
 
@@ -173,31 +166,22 @@ final class PipTile(c: Ctx) extends Workload(c) {
     PipTile.checkAll(spark, last, wh, mutate(writtenTiles), imgs, c.seed)
   }
 
-  def trace(t: Tracer, reps: Int): Layers = {
-    val runs = (1 to reps).map { _ =>
-      val scan = t.span("prefix:img.scan") {
-        val (d, _) = IcebergShaped.readVerified(spark, imgDir); noop(d)
-      }._2
-      val cover = t.span("prefix:cell.cover")(SpatialJoin.polygonCells(spark, polys, res).collect())
-      val join = t.span("prefix:join.assign") {
-        noop(assigned(IcebergShaped.readVerified(spark, imgDir)._1))
-      }._2
-      val pyr = t.span("prefix:tile.pyramid") {
-        noop(Tiling.tile(spark, assigned(IcebergShaped.readVerified(spark, imgDir)._1)).toDF())
-      }._2
-      val t0 = System.nanoTime()
-      val full = t.span("op")(op(Some(t)))._2
-      (scan, cover, join, pyr, full, (System.nanoTime() - t0) / 1e9)
-    }
-    val scan = runs.map(_._1); val (cov, cells) = (runs.map(_._2._2), runs.last._2._1)
-    val join = runs.map(_._3); val pyr = runs.map(_._4); val full = runs.map(_._5)
-    val Seq(img, _, pyramid, manifest) = selfTimes(Seq("img" -> scan.map(_.seconds),
-      "assign" -> join.map(_.seconds), "pyramid" -> pyr.map(_.seconds),
-      "manifest" -> full.map(_.seconds)))
-    val coverS = medianOf(cov.map(_.seconds))
-    val assignSelf = medianOf(join.map(_.seconds)) - medianOf(scan.map(_.seconds)) - coverS
-    val (s, cv, j, f) = (t.total(scan.last), t.total(cov.last), t.total(join.last),
-      t.total(full.last))
+  def trace(t: Tracer): Layers = {
+    // nested prefixes; a layer's self time is prefix k - prefix k-1
+    val scan = t.span("prefix:img.scan") {
+      val (d, _) = IcebergShaped.readVerified(spark, imgDir); noop(d)
+    }._2
+    val (cells, cover) = t.span("prefix:cell.cover")(SpatialJoin.polygonCells(spark, polys, res).collect())
+    val join = t.span("prefix:join.assign") {
+      noop(assigned(IcebergShaped.readVerified(spark, imgDir)._1))
+    }._2
+    val pyr = t.span("prefix:tile.pyramid") {
+      noop(Tiling.tile(spark, assigned(IcebergShaped.readVerified(spark, imgDir)._1)).toDF())
+    }._2
+    val t0 = System.nanoTime()
+    val full = t.span("op")(op(Some(t)))._2
+    val wall = (System.nanoTime() - t0) / 1e9
+    val (s, cv, j, f) = (t.total(scan), t.total(cover), t.total(join), t.total(full))
 
     // exact counts, outside the timed spans
     val imgs = IcebergShaped.readVerified(spark, imgDir)._1
@@ -206,9 +190,10 @@ final class PipTile(c: Ctx) extends Workload(c) {
     val tileBytes = writtenTiles.select(sum(length(col("tile_bytes")))).as[Long].head()
     val imageBytes = assigned(imgs).select(sum(length(col("bytes")))).as[Long].head()
     Layers(
-      self = Seq("img.scan_s" -> img._2, "cell.cover_s" -> coverS,
-        "join.assign_self_s" -> assignSelf, "tile.pyramid_self_s" -> pyramid._2,
-        "tile.manifest_self_s" -> manifest._2),
+      self = Seq("img.scan_s" -> scan.seconds, "cell.cover_s" -> cover.seconds,
+        "join.assign_self_s" -> (join.seconds - scan.seconds - cover.seconds),
+        "tile.pyramid_self_s" -> (pyr.seconds - join.seconds),
+        "tile.manifest_self_s" -> (full.seconds - pyr.seconds)),
       other = Seq("img.scan_rows" -> nImages.toDouble, "img.scan_bytes" -> inputBytes.toDouble,
         "cell.cover_cells" -> cells.length.toDouble,
         "cell.cover_res_count" -> cells.map(cp => CellIndex.res(cp.cell)).distinct.length.toDouble,
@@ -219,7 +204,7 @@ final class PipTile(c: Ctx) extends Workload(c) {
         "tile.bytes_per_image_byte" -> tileBytes.toDouble / math.max(1L, imageBytes)) ++
         s.metrics("img") ++ cv.metrics("cell") ++ (j - s - cv).metrics("join") ++
         (f - j).metrics("tile"),
-      wall = medianOf(runs.map(_._6)))
+      wall = wall)
   }
 }
 
@@ -270,52 +255,57 @@ object PipTile {
 /** The paper's whole job on a seeded OSM extract: PBF file → admin
   * relations → ring assembly → `.poly`/GeoJSON files; the rook-contiguity
   * graph of the boundaries walked by the blocked BFS fixpoint loop; the
-  * boundaries as the build side of the PIP join over clustered points;
-  * exact kNN. Detailed polygons (160-vertex rings, holes) make cover,
+  * boundaries as the build side of the PIP join over clustered points.
+  * Detailed polygons (200-vertex rings, holes) make cover,
   * candidate join and ray-cast the join's main cost.
   */
 final class BoundaryProbe(c: Ctx) extends Workload(c) {
   import spark.implicits._
-  val nx = 8
-  val ny = 6
+  val nx = 16
+  val ny = 12
   val nRel: Int = nx * ny
-  val edgeSegments = 40
+  val edgeSegments = 50
   val nPoints = 100000
-  val nCorpus = 20000
-  val nProbes = 3000
-  val k = 5
-  val res = 8
+  /** Join resolution. At res 8 the polygon cover was most of the join's
+    * CPU, and its JIT-compiled speed differed by 2x between runs of the
+    * same seed, which no median over a run's operations absorbs.
+    */
+  val res = 7
   private val box = ((-40.0, 40.0), (-80.0, 80.0))
-  /** BFS source cell; hops to cell (ix, iy) must be the Manhattan distance. */
-  private def seedCell: (Int, Int) = { val r = Gen.rng(c.seed, 6); (r.nextInt(nx), r.nextInt(ny)) }
+  /** BFS sources: every 4th cell in both directions from a seeded offset.
+    * Every cell is then at most 3 + 3 hops from a source, so the blocked
+    * loop runs the same number of rounds on every seed; hops to cell
+    * (ix, iy) must be the Manhattan distance to the nearest source.
+    */
+  private val sources: Seq[(Int, Int)] = {
+    val r = Gen.rng(c.seed, 6)
+    val (ox, oy) = (r.nextInt(4), r.nextInt(4))
+    for (iy <- oy until ny by 4; ix <- ox until nx by 4) yield (ix, iy)
+  }
+  private def cellId(ix: Int, iy: Int): Long = 1000000L + iy * nx + ix
   private var hopsOut: Seq[(Long, Long)] = Nil
   private val pbf = c.work.resolve("scene.osm.pbf")
   private val sinkDir = c.work.resolve("sink")
   private var expected: Seq[Gen.Expected] = Nil
-  private var knnOut: DataFrame = _
+  private var sinksOut: DataFrame = _
 
   def setup(): Map[String, Any] = {
     val s = Gen.gridScene(c.seed, nx, ny, edgeSegments, box._1, box._2, extras = true)
     PbfSource.writeFixture(pbf.toString, s.scene.nodes, s.scene.ways, s.scene.relations)
     expected = s.expected
-    def write(stream: Long, count: Int, cols: (String, String, String), dir: String): Unit = {
-      val (la, lo) = Gen.points(c.seed, stream, count, box._1, box._2)
-      la.indices.map(i => (i.toLong, la(i), lo(i))).toDF(cols._1, cols._2, cols._3)
-        .repartition(c.cpus).write.mode("overwrite").parquet(c.dir(dir))
-    }
-    write(2, nPoints, ("point_id", "lat", "lon"), "points")
-    write(3, nCorpus, ("nid", "clat", "clon"), "corpus")
-    write(4, nProbes, ("probe_id", "lat", "lon"), "probes")
+    val (la, lo) = Gen.points(c.seed, 2, nPoints, box._1, box._2)
+    la.indices.map(i => (i.toLong, la(i), lo(i))).toDF("point_id", "lat", "lon")
+      .repartition(c.cpus).write.mode("overwrite").parquet(c.dir("points"))
     Map("target_relations" -> nRel, "grid" -> s"${nx}x$ny", "vertices_per_outer_ring" -> 4 * edgeSegments,
       "pbf_relations" -> s.scene.relations.size, "pbf_ways" -> s.scene.ways.size,
-      "pbf_nodes" -> s.scene.nodes.size, "points" -> nPoints, "knn_corpus" -> nCorpus,
-      "knn_probes" -> nProbes, "k" -> k, "res" -> res, "input_bytes" -> inputBytes)
+      "pbf_nodes" -> s.scene.nodes.size, "points" -> nPoints, "res" -> res,
+      "input_bytes" -> inputBytes)
   }
 
   def inputBytes: Long =
-    Files.size(pbf) + Seq("points", "corpus", "probes").map(d => dirBytes(c.work.resolve(d))).sum
+    Files.size(pbf) + dirBytes(c.work.resolve("points"))
 
-  private def triple = PbfSource.readTriple(spark, pbf.toString)
+  private def triple = PbfSource.readTriple(spark, pbf.toString, c.cpus)
   private def points = spark.read.parquet(c.dir("points"))
   private def assigned(pts: DataFrame, polys: Dataset[PolygonRow]): DataFrame =
     SpatialJoin.assign(spark, pts, polys, res = res, idCol = "point_id")
@@ -323,34 +313,33 @@ final class BoundaryProbe(c: Ctx) extends Workload(c) {
     sinks.select("name", "rings", "relation_id", "admin_level").as[PolygonRow]
 
   def op(t: Option[Tracer]): OpOut = {
-    Option(knnOut).foreach(_.unpersist(blocking = false))
     rmrf(sinkDir)
-    spark.catalog.clearCache() // relSegments caches per call; keep operations independent
+    // relSegments caches per call and the last outputs stay cached for the
+    // checks: drop all of it so operations stay independent
+    spark.catalog.clearCache()
     val t0 = System.nanoTime()
-    val (r, w, n) = span(t, "osm.readTriple")(triple)
-    val sinks = span(t, "emit.extractWithSinks") {
+    // decoded once, for both the extraction and the contiguity graph
+    val (r, w, n) = span(t, "osm.readTriple") {
+      val (r, w, n) = triple; (r.persist(), w.persist(), n.persist())
+    }
+    sinksOut = span(t, "emit.extractWithSinks") {
       val df = BoundaryExtract.extractWithSinks(spark, r, w, n, 8, 8).persist(); df.count(); df
     }
     val files = span(t, "emit.write")(
-      BoundaryWriter.write(sinks, sinkDir.toString, BoundaryWriter.OverwriteAll, geojson = true))
+      BoundaryWriter.write(sinksOut, sinkDir.toString, BoundaryWriter.OverwriteAll, geojson = true))
     val adj = span(t, "osm.contiguity") {
       val a = BoundaryExtract.contiguity(spark, r, w, n).persist(); a.count(); a
     }
-    val (sx, sy) = seedCell
-    hopsOut = span(t, "graph.hops")(Bfs.hops(spark, adj, Seq(1000000L + sy * nx + sx).toDF("id"))
-      .as[(Long, Long)].collect().toSeq)
+    hopsOut = span(t, "graph.hops")(Bfs.hops(spark, adj,
+      sources.map { case (ix, iy) => cellId(ix, iy) }.toDF("id")).as[(Long, Long)].collect().toSeq)
     adj.unpersist(blocking = false)
     val t1 = System.nanoTime()
     span(t, "join.assign")(
-      assigned(points, asPolygons(sinks)).groupBy("relation_id").count().collect())
+      assigned(points, asPolygons(sinksOut)).groupBy("relation_id").count().collect())
     val t2 = System.nanoTime()
-    knnOut = span(t, "join.knn")(Knn.knnPoints(spark, spark.read.parquet(c.dir("probes")),
-      spark.read.parquet(c.dir("corpus")), k))
-    val t3 = System.nanoTime()
-    sinks.unpersist(blocking = false)
-    // attempted: every sink file plus the contiguity, BFS, join and kNN jobs
-    OpOut(nRel, files + 4, Map("relations_per_s" -> nRel / ((t1 - t0) / 1e9),
-      "points_per_s" -> nPoints / ((t2 - t1) / 1e9), "knn_probes_per_s" -> nProbes / ((t3 - t2) / 1e9)))
+    // attempted: every sink file plus the contiguity, BFS and join jobs
+    OpOut(nRel, files + 3, Map("relations_per_s" -> nRel / ((t1 - t0) / 1e9),
+      "points_per_s" -> nPoints / ((t2 - t1) / 1e9)))
   }
 
   /** Generated rings as the engine's float points (brute-force side). */
@@ -371,97 +360,84 @@ final class BoundaryProbe(c: Ctx) extends Workload(c) {
   private def checkWith(mutate: Seq[(Long, Long)] => Seq[(Long, Long)],
       mutateHops: Seq[(Long, Long)] => Seq[(Long, Long)]): Seq[Check] = {
     val r = Gen.rng(c.seed, 101)
-    val pts = points.as[(Long, Double, Double)].collect()
-    val sample = Seq.fill(400)(pts(r.nextInt(pts.length)))
-    val (rel, way, node) = triple
-    val polys = spark.createDataset(BoundaryExtract.extract(spark, rel, way, node).collect().toSeq)
-    val got = assigned(points.filter(col("point_id").isin(sample.map(_._1): _*)), polys)
+    val sampled = points.filter(col("point_id").isin(Seq.fill(400)(r.nextInt(nPoints).toLong): _*))
+    val sample = sampled.as[(Long, Double, Double)].collect().toSeq
+    val got = assigned(sampled, asPolygons(sinksOut))
       .select("point_id", "relation_id").as[(Long, Long)].collect().toSeq
-    val corpus = spark.read.parquet(c.dir("corpus")).as[(Long, Double, Double)].collect()
-    val probes = spark.read.parquet(c.dir("probes")).as[(Long, Double, Double)].collect()
-    val pSample = Seq.fill(100)(probes(r.nextInt(probes.length)))
-    val knnGot = knnOut.filter(col("probe_id").isin(pSample.map(_._1): _*))
-      .select("probe_id", "nid", "rank").as[(Long, Long, Int)].collect().toSeq
-    val (sx, sy) = seedCell
-    val wantHops = (for (iy <- 0 until ny; ix <- 0 until nx)
-      yield (1000000L + iy * nx + ix) -> (math.abs(ix - sx) + math.abs(iy - sy)).toLong).toMap
+    val wantHops = (for (iy <- 0 until ny; ix <- 0 until nx) yield cellId(ix, iy) ->
+      sources.map { case (sx, sy) => math.abs(ix - sx) + math.abs(iy - sy) }.min.toLong).toMap
     val gotHops = mutateHops(hopsOut).toMap
     BoundaryProbe.checkSink(sinkDir, expected, c.seed) ++ Seq(
-      Check("BFS hops over contiguity = grid Manhattan distance", nRel,
+      Check("BFS hops over contiguity = Manhattan distance to the nearest source", nRel,
         wantHops.count { case (id, h) => !gotHops.get(id).contains(h) }.toLong +
-          (gotHops.keySet -- wantHops.keySet).size, s"seed cell ($sx, $sy)"),
-      BoundaryProbe.checkAssign(sample, expectedPolys, mutate(got.sorted)),
-      BoundaryProbe.checkKnn(pSample, corpus, k, knnGot))
+          (gotHops.keySet -- wantHops.keySet).size, s"${sources.size} sources"),
+      BoundaryProbe.checkAssign(sample, expectedPolys, mutate(got.sorted)))
   }
 
-  def trace(t: Tracer, reps: Int): Layers = {
-    val runs = (1 to reps).map { _ =>
-      def fresh[A](name: String)(body: => A): (A, Span) = {
-        spark.catalog.clearCache(); t.span(name)(body)
-      }
-      val decode = fresh("prefix:osm.decode") { val (r, w, n) = triple; Seq(r, w, n).map(_.count()).sum }
-      val segs = fresh("prefix:osm.relSegments") {
-        val (r, w, n) = triple; noop(BoundaryExtract.relSegments(spark, r, w, n).toDF())
-      }._2
-      val ring = fresh("prefix:ring.assemble") {
-        val (r, w, n) = triple; noop(BoundaryExtract.extract(spark, r, w, n).toDF())
-      }._2
-      val polys = { val (r, w, n) = triple; BoundaryExtract.extract(spark, r, w, n).collect().toSeq }
-      val scan = t.span("prefix:scan")(noop(points))._2
-      val cover = t.span("prefix:cell.cover")(
-        SpatialJoin.polygonCells(spark, spark.createDataset(polys), res).collect())
-      val t0 = System.nanoTime()
-      val full = t.span("op")(op(Some(t)))
-      (decode, segs, ring, scan, cover, full, (System.nanoTime() - t0) / 1e9)
+  def trace(t: Tracer): Layers = {
+    // nested prefixes, each from a clean cache (relSegments persists its
+    // inputs); a layer's self time is prefix k - prefix k-1
+    def fresh[A](name: String)(body: => A): (A, Span) = {
+      spark.catalog.clearCache(); t.span(name)(body)
     }
-    def kid(s: Span, n: String) = t.spans.filter(x => x.parent == s.id && x.name == n).head
-    val Seq(dec, seg, rng, fmt) = selfTimes(Seq(
-      "dec" -> runs.map(_._1._2.seconds), "seg" -> runs.map(_._2.seconds),
-      "ring" -> runs.map(_._3.seconds),
-      "fmt" -> runs.map(x => kid(x._6._2, "emit.extractWithSinks").seconds)))
-    val writeS = medianOf(runs.map(x => kid(x._6._2, "emit.write").seconds))
-    val scanS = medianOf(runs.map(_._4.seconds)); val coverS = medianOf(runs.map(_._5._2.seconds))
-    val assignS = medianOf(runs.map(x => kid(x._6._2, "join.assign").seconds))
-    val knnS = medianOf(runs.map(x => kid(x._6._2, "join.knn").seconds))
-    val contS = medianOf(runs.map(x => kid(x._6._2, "osm.contiguity").seconds))
-    val hopsS = medianOf(runs.map(x => kid(x._6._2, "graph.hops").seconds))
-    val l = runs.last
-    val opSpan = l._6._2
-    val (cs, cr) = (t.total(l._2), t.total(l._3))
-    val Seq(cx, cw, ca, ck, ccont, chops) = Seq("emit.extractWithSinks", "emit.write",
-      "join.assign", "join.knn", "osm.contiguity", "graph.hops").map(n => t.total(kid(opSpan, n)))
-    val (cscan, ccov) = (t.total(l._4), t.total(l._5._2))
+    val (entities, decode) = fresh("prefix:osm.decode") {
+      val (r, w, n) = triple; Seq(r, w, n).map(_.count()).sum
+    }
+    val segs = fresh("prefix:osm.relSegments") {
+      val (r, w, n) = triple; noop(BoundaryExtract.relSegments(spark, r, w, n).toDF())
+    }._2
+    // ring assembly and formatting do little work next to the Spark jobs
+    // around them, so they are timed directly over cached inputs instead of
+    // as differences of seconds-long prefixes
+    val cachedSegs = { val (r, w, n) = triple; BoundaryExtract.relSegments(spark, r, w, n).persist() }
+    cachedSegs.count()
+    val (built, ring) = t.span("ring.assemble") {
+      val p = cachedSegs.map(BoundaryExtract.assemblePolygon).persist(); p.count(); p
+    }
+    val format = t.span("emit.format")(noop(built.map(p =>
+      (Emitters.polyText(p), Emitters.geoJson(p).orNull)).toDF()))._2
+    // the cover prefix builds on what the operation's join gets: the
+    // cached, name-deduplicated sink rows
+    val sinksPre = { val (r, w, n) = triple; BoundaryExtract.extractWithSinks(spark, r, w, n).persist() }
+    sinksPre.count()
+    val scan = t.span("prefix:scan")(noop(points))._2
+    val (cells, cover) = t.span("prefix:cell.cover")(
+      SpatialJoin.polygonCells(spark, asPolygons(sinksPre), res).collect())
+    val t0 = System.nanoTime()
+    val full = t.span("op")(op(Some(t)))._2
+    val wall = (System.nanoTime() - t0) / 1e9
+    def kid(n: String) = t.spans.find(x => x.parent == full.id && x.name == n).get
+    val Seq(write, assign, cont, hops) =
+      Seq("emit.write", "join.assign", "osm.contiguity", "graph.hops").map(kid)
+    val Seq(cs, cr, cf, cw, ca, ccont, chops, cscan, ccov) =
+      Seq(segs, ring, format, write, assign, cont, hops, scan, cover).map(t.total)
 
-    // exact counts, outside the timed spans
-    spark.catalog.clearCache()
-    val (r, w, n) = triple
-    val vertices = BoundaryExtract.relSegments(spark, r, w, n)
-      .select(sum(size(col("pts")))).as[Long].head()
-    val polys = spark.createDataset(BoundaryExtract.extract(spark, r, w, n).collect().toSeq)
-    val cells = l._5._1.toSeq
-    val matches = assigned(points, polys).count()
-    val cand = candidates(spark, points, cells, "lat", "lon")
-    val adjacency = BoundaryExtract.contiguity(spark, r, w, n).count()
+    // exact counts, outside the timed spans (the op's own outputs stay
+    // cached for the checks)
+    val vertices = cachedSegs.select(sum(size(col("pts")))).as[Long].head()
+    val matches = assigned(points, built).count()
+    val cand = candidates(spark, points, cells.toSeq, "lat", "lon")
+    val adjacency = { val (r, w, n) = triple; BoundaryExtract.contiguity(spark, r, w, n).count() }
     Layers(
-      self = Seq("osm.pbf_decode_s" -> dec._2, "osm.relsegments_self_s" -> seg._2,
-        "osm.contiguity_s" -> contS, "graph.hops_s" -> hopsS,
-        "ring.assemble_self_s" -> rng._2, "emit.format_self_s" -> fmt._2,
-        "emit.write_s" -> writeS, "cell.cover_s" -> coverS,
-        "join.assign_self_s" -> (assignS - scanS - coverS), "join.knn_s" -> knnS),
-      other = Seq("osm.entities" -> l._1._1.toDouble, "osm.vertices" -> vertices.toDouble,
-        "ring.rings" -> polys.map(_.rings.size.toLong).reduce(_ + _).toDouble,
-        "emit.files_written" -> (l._6._1.units - 4).toDouble,
+      self = Seq("osm.pbf_decode_s" -> decode.seconds,
+        "osm.relsegments_self_s" -> (segs.seconds - decode.seconds),
+        "osm.contiguity_s" -> cont.seconds, "graph.hops_s" -> hops.seconds,
+        "ring.assemble_self_s" -> ring.seconds, "emit.format_self_s" -> format.seconds,
+        "emit.write_s" -> write.seconds, "cell.cover_s" -> cover.seconds,
+        "join.assign_self_s" -> (assign.seconds - scan.seconds - cover.seconds)),
+      other = Seq("osm.entities" -> entities.toDouble, "osm.vertices" -> vertices.toDouble,
+        "ring.rings" -> built.select(sum(size(col("rings")))).as[Long].head().toDouble,
+        "emit.files_written" -> { val f = Files.list(sinkDir); try f.count().toDouble finally f.close() },
         "graph.edges" -> adjacency.toDouble,
         "graph.max_hops" -> hopsOut.map(_._2).max.toDouble,
         "emit.bytes_written" -> dirBytes(sinkDir).toDouble,
         "cell.cover_cells" -> cells.length.toDouble,
         "cell.cover_res_count" -> cells.map(cp => CellIndex.res(cp.cell)).distinct.length.toDouble,
         "join.candidates" -> cand.toDouble, "join.matches" -> matches.toDouble,
-        "join.refine_ratio" -> matches.toDouble / math.max(1L, cand),
-        "join.knn_jobs" -> ck.jobs.toDouble) ++
-        (cs + ccont).metrics("osm") ++ (cr - cs).metrics("ring") ++ (cx - cr + cw).metrics("emit") ++
-        chops.metrics("graph") ++ ccov.metrics("cell") ++ (ca + ck - cscan - ccov).metrics("join"),
-      wall = medianOf(runs.map(_._7)))
+        "join.refine_ratio" -> matches.toDouble / math.max(1L, cand)) ++
+        (cs + ccont).metrics("osm") ++ cr.metrics("ring") ++ (cf + cw).metrics("emit") ++
+        chops.metrics("graph") ++ ccov.metrics("cell") ++ (ca - cscan - ccov).metrics("join"),
+      wall = wall)
   }
 }
 
@@ -483,19 +459,6 @@ object BoundaryProbe {
       s"${want.size} expected pairs, ${have.size} returned")
   }
 
-  /** Sampled kNN top-k must equal brute force ordered by (dist, nid). */
-  def checkKnn(sample: Seq[(Long, Double, Double)], corpus: Seq[(Long, Double, Double)], k: Int,
-      got: Seq[(Long, Long, Int)]): Check = {
-    val byProbe = got.groupBy(_._1).map { case (p, xs) => p -> xs.sortBy(_._3).map(_._2) }
-    val probes = sample.distinct
-    val bad = probes.count { case (id, la, lo) =>
-      val want = corpus.map { case (nid, cla, clo) =>
-        (math.sqrt((la - cla) * (la - cla) + (lo - clo) * (lo - clo)), nid)
-      }.sorted.take(k).map(_._2)
-      byProbe.getOrElse(id, Nil) != want
-    }
-    Check("sampled kNN top-k = brute force", probes.size, bad.toLong, s"k=$k")
-  }
   /** Sink file name of a generated relation: names shared by two relations
     * get the `_<relation id>` suffix, as the reference's duplicate rule.
     */
@@ -548,10 +511,4 @@ object BoundaryProbe {
         s"${sample.size} relations"))
   }
 
-  private implicit class AsScala[T](it: java.util.Iterator[T]) {
-    def asScala: Iterator[T] = new Iterator[T] {
-      def hasNext: Boolean = it.hasNext
-      def next(): T = it.next()
-    }
-  }
 }
