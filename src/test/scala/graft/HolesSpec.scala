@@ -78,4 +78,47 @@ class HolesSpec extends AnyFunSuite {
     val ref = graft.osm.BoundaryExtract.extract(spark, r, w, n, 8, 8).collect().head
     assert(ref.rings.length == 2)
   }
+
+  test("role-aware extraction pins every golden row; all-dangling relations are dropped") {
+    import graft.fixtures.OsmScenes._
+    // golden S1–S7 plus one admin-8 relation whose member ways (outer and
+    // inner) are all missing: the role-aware path keeps only relations with
+    // surviving vertices, the reference path keeps it with empty rings
+    val g = golden
+    val dangling = RelationRow(180,
+      Seq(Member("way", 996L, "outer"), Member("way", 997L, "inner")),
+      Map("boundary" -> "administrative", "admin_level" -> "8", "name" -> "Ghost"))
+    val (n, w, r) = g.copy(relations = g.relations :+ dangling).toDFs(spark)
+    val got = graft.osm.BoundaryExtract.extractRfc7946(spark, r, w, n, 8, 8).collect()
+      .map(row => (row.getAs[Long]("relation_id"), row.getAs[String]("name"),
+        row.getAs[Int]("n_polygons"), row.getAs[Int]("n_holes"),
+        row.getAs[String]("geometry_rfc7946")))
+      .sortBy(_._1).toSeq
+    // closing vertex and stitch-junction duplicates stay in the rings;
+    // S3's inner ring is disjoint from its outer, so it stays an exterior
+    def square(lat: String, lon: String, lat1: String, lon1: String) =
+      s"[[[$lon,$lat],[$lon1,$lat],[$lon1,$lat1],[$lon,$lat1],[$lon,$lat]]]"
+    def polygon(c: String) = s"""{"coordinates":$c,"type":"Polygon"}"""
+    val s6 = polygon(square("53", "13", "53.1", "13.1"))
+    val want = Seq(
+      (11L, "Alpha", 1, 0, polygon(
+        "[[[8.1,48.1],[8,48.1],[8,48.1],[8,48],[8,48],[8.1,48],[8.1,48.1]]]")),
+      (12L, "Beta", 1, 0, polygon(
+        "[[[9,49],[9.1,49],[9.1,49.1],[9.1,49.1],[9,49.1],[9,49.1],[9,49]]]")),
+      (13L, "Gamma", 2, 0, s"""{"coordinates":[${square("50", "10", "50.2", "10.2")},""" +
+        s"""${square("50.5", "10.5", "50.55", "10.55")}],"type":"MultiPolygon"}"""),
+      (14L, "Delta", 1, 0, polygon(
+        "[[[11.1,51.1],[11,51.1],[11,51],[11,51],[11.1,51],[11.1,51.1]]]")),
+      (15L, "Stadt_UNKNOWN_NAME", 1, 0, polygon(square("52", "12", "52.1", "12.1"))),
+      (161L, "Vimianzo", 1, 0, s6),
+      (162L, "vimianzo", 1, 0, s6),
+      (163L, "Vimianzo", 1, 0, s6),
+      (164L, "Unique", 1, 0, s6),
+      (165L, "ab\\/&:<>|*c", 1, 0, s6),
+      (173L, "Exact", 1, 0, polygon(square("54", "14", "54.1", "14.1"))))
+    assert(got == want)
+    val ref = graft.osm.BoundaryExtract.extract(spark, r, w, n, 8, 8).collect()
+      .find(_.relation_id == 180L)
+    assert(ref.map(p => (p.name, p.rings)) == Some(("Ghost", Nil)))
+  }
 }
