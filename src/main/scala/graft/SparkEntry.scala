@@ -1901,11 +1901,10 @@ object SparkEntry {
           max(col("gmax")).as("gmax_max"))
     }),
 
-    // the SALTED shuffle path of the flagship spatial join, oracled for
-    // result parity with the broadcast path: useBroadcast=false +
-    // saltBuckets=4 replicates build rows ×4 and routes each probe to
-    // one deterministic salt — the skew defense for dense cells at
-    // planet scale must not change a single assignment.
+    // per-zone image counts of the flagship spatial join alone
+    // (SpatialJoin.assign: driver-collected cover → broadcast cell
+    // equi-join → ray-cast refine) over 300 geotagged images — q156's
+    // assignment without the Sobel scoring. The key name is historical.
     "q157_assign_salted" -> ((s, _) => {
       import s.implicits._
       val idx = substring(col("image_id"), 5, 9).cast("long")
@@ -1913,8 +1912,7 @@ object SparkEntry {
         .select(col("image_id"),
           GraftFunctions.latOfKey(idx).as("lat"),
           GraftFunctions.lonOfKey(idx).as("lon"))
-      graft.join.SpatialJoin.assign(s, probes, s.createDataset(rectPolys),
-          res = 6, useBroadcast = false, saltBuckets = 4)
+      graft.join.SpatialJoin.assign(s, probes, s.createDataset(rectPolys), res = 6)
         .groupBy(col("relation_id"))
         .agg(count(lit(1)).as("n_images"))
     }),
@@ -6800,8 +6798,7 @@ object SparkEntry {
          |FROM asn JOIN en ON en.i = asn.i GROUP BY 1""".stripMargin,
 
     // q157 — the geotag derivation + open-interval bbox containment
-    // (the q12/q156 assignment form), counted per zone; the salted
-    // shuffle plan must reproduce these counts exactly
+    // (the q12/q156 assignment form), counted per zone
     "q157_assign_salted" ->
       s"""WITH pts AS (SELECT CAST(range AS BIGINT) AS i FROM range(0, 300)),
          |geo AS (SELECT i,

@@ -333,7 +333,6 @@ object Raster {
   def voronoiAssign(cells: DataFrame, seeds: DataFrame,
       idCol: String = "relation_id", maxRounds: Int = 512,
       blockRounds: Int = 8): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val occ = graft.graph.Bfs.joinSide(
       cells.select(col(idCol), col("cx").cast("long").as("cx"),
         col("cy").cast("long").as("cy")))
@@ -462,8 +461,7 @@ object Raster {
     * with a lazy localCheckpoint — one field computation serves both
     * branches and the plan stays linear.
     */
-  def medialAxis(cells: DataFrame, idCol: String = "relation_id",
-      maxRounds: Int = 512): DataFrame = {
+  def medialAxis(cells: DataFrame, idCol: String = "relation_id"): DataFrame = {
     val dt = distanceTransform(cells, idCol).localCheckpoint(false)
     val key = Seq(idCol, "cx", "cy")
     val offsets = Seq((-1, 0), (1, 0), (0, -1), (0, 1))
@@ -504,7 +502,6 @@ object Raster {
   def costDistance(cells: DataFrame, seeds: DataFrame,
       idCol: String = "relation_id", maxRounds: Int = 512,
       blockRounds: Int = 8): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val guardedV = when(col("v") > 0, col("v"))
       .otherwise(raise_error(concat(
         lit("Raster.costDistance: non-positive cost at cell ("),

@@ -15,15 +15,13 @@ import graft.functions.GraftFunctions
   *   probe side:  points.withColumn("cell", cellOf(lat, lon, res))
   *   equi-join on cell  →  exact ray-cast refine (native Expression)
   *
-  * Scale paths:
-  *  - `broadcast = true` (default): polygon×cell rows broadcast; the probe
-  *    table (the 10^12-row image table) streams map-side — NO shuffle of the
-  *    big side at all. Right whenever Σ|cover| fits an executor (the
-  *    reference's whole output is "a few hundred" boundaries).
-  *  - `broadcast = false`: shuffle hash/SMJ on cell with AQE skew splitting;
-  *    add `saltBuckets > 1` to split hot cells (dense cities): probe gets a
-  *    random-but-deterministic salt from pmod(hash(id),S), build side is
-  *    replicated ×S.
+  * Scale contract: the build side (polygon×cell rows) is collected on the
+  * driver and broadcast; the probe table (the 10^12-row image table)
+  * streams map-side — NO shuffle of the big side at all. This holds
+  * whenever Σ|cover| fits the driver and an executor (the reference's whole
+  * output is "a few hundred" boundaries; `polygonCells` caps each cover).
+  * The probe side is never repartitioned, so a hot cell (a dense city)
+  * costs no skew.
   */
 object SpatialJoin {
 
@@ -58,6 +56,8 @@ object SpatialJoin {
   /** Assign each probe row its containing polygons.
     *
     * @param probes must contain `idCol`, `latCol`, `lonCol`
+    * @param idCol the probe key; every probe column passes through as-is,
+    *        so the join itself never reads it
     * @return probe id + lat/lon + (relation_id, name) per containing polygon
     *         (inner: unassigned probes dropped)
     */
@@ -68,66 +68,29 @@ object SpatialJoin {
       res: Int,
       idCol: String = "image_id",
       latCol: String = "lat",
-      lonCol: String = "lon",
-      useBroadcast: Boolean = true,
-      saltBuckets: Int = 1): DataFrame = {
+      lonCol: String = "lon"): DataFrame = {
     GraftFunctions.register(spark)
     import spark.implicits._
-    val rings0 = polygonRings(spark, polys)
     // The probe must encode one cell per distinct cover resolution present
     // on the build side (usually 1, occasionally 2-3 with mixed polygon
     // sizes) so every polygon is matchable at ITS cover resolution. That
-    // res list and the build rows must come from ONE cover computation —
-    // coverAuto's bbox descent + per-cell ring intersection is the
-    // expensive part for detailed polygons, and a naive metadata collect
-    // would re-run it per assign call.
-    val (cells0, resList) =
-      if (useBroadcast) {
-        // build side is broadcast-sized by design: collect it once on the
-        // driver and serve both the res list and the broadcast from the
-        // same array (the executors then receive it via the broadcast —
-        // the cover flatMap runs exactly once per assign)
-        val arr = polygonCells(spark, polys, res).collect()
-        val rs = arr.iterator.map(c => (c.cell >>> 58).toInt).toSet.toSeq.sorted
-        (spark.createDataset(arr.toIndexedSeq).toDF()
-          .withColumnRenamed("name", "polygon_name"),
-          if (rs.isEmpty) Seq(res) else rs)
-      } else {
-        // shuffle path: the build side may exceed driver memory — persist
-        // so the res-list collect and the join read one cover computation.
-        // Stays cached for the query's lifetime (callers running many
-        // assigns release via spark.catalog.clearCache()).
-        val df = polygonCells(spark, polys, res).toDF()
-          .withColumnRenamed("name", "polygon_name")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val rs = df.select(shiftright(col("cell"), 58).cast("int"))
-          .distinct().as[Int].collect().sorted.toSeq
-        (df, if (rs.isEmpty) Seq(res) else rs)
-      }
+    // res list and the build rows come from ONE cover computation, collected
+    // once on the driver: the same array serves the res list and the
+    // broadcast, so the cover flatMap runs exactly once per assign.
+    val cells = polygonCells(spark, polys, res).collect()
+    val covered = cells.iterator.map(c => (c.cell >>> 58).toInt).toSet.toSeq.sorted
+    val resList = if (covered.isEmpty) Seq(res) else covered
+    val build = spark.createDataset(cells.toIndexedSeq).toDF()
+      .withColumnRenamed("name", "polygon_name")
     val p = probes.withColumn("cell", explode(array(
       resList.map(r => GraftFunctions.cellOfCol(col(latCol), col(lonCol), r)): _*)))
 
-    val joined =
-      if (useBroadcast) {
-        p.join(broadcast(cells0), Seq("cell"))
-      } else if (saltBuckets > 1) {
-        // replicate build rows ×S; probe picks one deterministic salt
-        val salted = cells0.withColumn("salt",
-          explode(array((0 until saltBuckets).map(lit): _*)))
-        val ps = p.withColumn("salt",
-          pmod(hash(col(idCol)), lit(saltBuckets)))
-        ps.join(salted, Seq("cell", "salt")).drop("salt")
-      } else {
-        p.join(cells0, Seq("cell"))
-      }
-
     // all probe columns pass through — the big side is read ONCE (an extra
     // self-join to re-attach payloads would double the 100 TB scan). Rings
-    // attach here via a second broadcast keyed per polygon (unique — one
-    // copy each regardless of cover size); the broadcast hint keeps the
-    // probe side map-side-only even when the candidate join shuffled.
-    joined
-      .join(broadcast(rings0), Seq("relation_id"))
+    // attach via a second broadcast keyed per polygon (unique — one copy
+    // each regardless of cover size).
+    p.join(broadcast(build), Seq("cell"))
+      .join(broadcast(polygonRings(spark, polys)), Seq("relation_id"))
       .filter(GraftFunctions.rayCastContains(col("rings"), col(latCol), col(lonCol)))
       .drop("rings")
   }

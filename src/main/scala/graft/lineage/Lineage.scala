@@ -1,5 +1,6 @@
 package graft.lineage
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable.ArrayBuffer
@@ -41,39 +42,13 @@ object Lineage {
     spark.sparkContext.addSparkListener(c)
     try {
       val result = body
-      // the listener bus is async; its drain API (waitUntilEmpty) is
-      // private[spark] but reachable reflectively — the fast path costs
-      // ~0 ms vs the 300 ms-minimum quiescence poll, which previously
-      // charged every tile batch a pure-sleep tax (>3 s over a q124 run)
-      if (!drainBus(spark)) {
-        var last = -1
-        var stable = 0
-        var waited = 0
-        while (stable < 2 && waited < 5000) {
-          val n = c.synchronized(c.rows.length)
-          if (n == last) stable += 1 else { stable = 0; last = n }
-          // 50 ms samples: the fallback only runs when the reflective
-          // drain is unreachable, so bias toward completeness over speed
-          Thread.sleep(50); waited += 50
-        }
-      }
+      // the listener bus is async: drain it so every task-end of `body`
+      // has reached the collector; a stuck bus fails loudly after 5 s
+      // rather than returning partial lineage
+      ListenerBusDrain.waitUntilEmpty(spark.sparkContext, 5000L)
       (result, c.rows.toSeq.toDF())
     } finally {
       spark.sparkContext.removeSparkListener(c)
     }
   }
-
-  /** Reflective LiveListenerBus.waitUntilEmpty — false if unreachable. */
-  private def drainBus(spark: SparkSession): Boolean =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount <= 1)
-        .exists { m =>
-          if (m.getParameterCount == 0) m.invoke(bus)
-          else m.invoke(bus, java.lang.Long.valueOf(5000L))
-          true
-        }
-    } catch { case _: Throwable => false }
 }

@@ -23,10 +23,11 @@ import graft.ring.RingAssembler.SegNode
 object BoundaryExtract {
 
   /** One flattened vertex after the joins: enough to re-nest segments in
-    * exact relation-member × way-node order.
+    * exact relation-member × way-node order. `inner` (the member's role is
+    * "inner") is last, so it never decides the sort order.
     */
   final case class SegPoint(member_pos: Int, node_pos: Int, node_id: Long,
-      lat_dm: Int, lon_dm: Int)
+      lat_dm: Int, lon_dm: Int, inner: Boolean)
 
   final case class RelSegments(relation_id: Long, tags: Map[String, String],
       pts: Seq[SegPoint])
@@ -43,23 +44,17 @@ object BoundaryExtract {
 
   /** F3 — member projection: way members only, ANY role, member order kept
     * via posexplode (`/root/reference/src/osm_reader.rs:55-57`).
+    * The role rides along as `inner` for [[extractRfc7946]]; null-safe, so
+    * a member without a role reads as outer.
     */
   def memberWays(filteredRelations: DataFrame): DataFrame =
     filteredRelations
       .select(col("id").as("relation_id"),
         posexplode(col("members")).as(Seq("member_pos", "m")))
       .filter(col("m.member_type") === "way")
-      .select(col("relation_id"), col("member_pos"), col("m.member_id").as("way_id"))
+      .select(col("relation_id"), col("member_pos"), col("m.member_id").as("way_id"),
+        (col("m.role") <=> "inner").as("inner"))
 
-  /** Full pipeline: (relations, ways, nodes) → typed Dataset[PolygonRow].
-    *
-    * Join semantics: INNER both times — dangling way refs and dangling node
-    * refs are silently dropped (`filter_map`, osm_reader.rs:59-81). A way
-    * whose nodes ALL dangle yields no rows ≡ the empty segment our ring
-    * assembler drops (documented divergence, SURVEY.md §7.4.4). Relations
-    * with zero surviving segments are KEPT (left join back) — the reference
-    * emits a Polygon with an empty points list for them.
-    */
   /** Broadcast/shuffle auto-switch: (broadcast member list?, broadcast
     * per-vertex frames?). The vertex side uses members × 64 (conservative
     * mean way length; OSM caps ways at 2000 nodes) against the same
@@ -79,7 +74,16 @@ object BoundaryExtract {
   private def maybeBroadcast(df: DataFrame, on: Boolean): DataFrame =
     if (on) broadcast(df) else df
 
-  /** @param maxBroadcastMembers auto-switch threshold: when the exploded
+  /** Full pipeline: (relations, ways, nodes) → typed Dataset[PolygonRow].
+    *
+    * Join semantics: INNER both times — dangling way refs and dangling node
+    * refs are silently dropped (`filter_map`, osm_reader.rs:59-81). A way
+    * whose nodes ALL dangle yields no rows ≡ the empty segment our ring
+    * assembler drops (documented divergence, SURVEY.md §7.4.4). Relations
+    * with zero surviving segments are KEPT (left join back) — the reference
+    * emits a Polygon with an empty points list for them.
+    *
+    * @param maxBroadcastMembers auto-switch threshold: when the exploded
     *   member list exceeds this many rows, BOTH big joins (and the final
     *   re-nest re-attach) run as shuffle joins instead of broadcasts — at
     *   planet scale (~10⁷-10⁸ boundary way refs, each way ≤2000 nodes by the
@@ -104,9 +108,10 @@ object BoundaryExtract {
 
   /** The shared scan→join→re-nest front half of the pipeline (S1-S3,
     * J1-J4, G1-G2): one row per admin relation with its flat vertex list
-    * ordered by (member_pos, node_pos), decimicro coords intact. Both
-    * [[extract]] (float conversion + emit) and [[polygonStats]] (exact
-    * integer geometry) map their kernels over this.
+    * ordered by (member_pos, node_pos), decimicro coords intact. Every
+    * kernel in this object — [[extract]] (float conversion + emit),
+    * [[extractRfc7946]] (role-aware holes), [[polygonStats]] (exact integer
+    * geometry) and the rest — maps over this one plan.
     */
   def relSegments(
       spark: SparkSession,
@@ -133,7 +138,7 @@ object BoundaryExtract {
     // list; pos kept. Shuffle fallback keys on way id — uniform.
     val waySegs = ways
       .join(maybeBroadcast(members, bcastMembers), col("id") === col("way_id"))
-      .select(col("relation_id"), col("member_pos"),
+      .select(col("relation_id"), col("member_pos"), col("inner"),
         posexplode(col("node_ids")).as(Seq("node_pos", "node_id")))
 
     // J2+J4: big `nodes` streams against the surviving refs. waySegs is
@@ -142,7 +147,8 @@ object BoundaryExtract {
     val verts = nodes
       .join(maybeBroadcast(waySegs, bcastSegs), nodes("id") === waySegs("node_id"))
       .select(col("relation_id"), col("member_pos"), col("node_pos"),
-        col("node_id"), col("decimicro_lat").as("lat_dm"), col("decimicro_lon").as("lon_dm"))
+        col("node_id"), col("decimicro_lat").as("lat_dm"), col("decimicro_lon").as("lon_dm"),
+        col("inner"))
 
     // G1+G2: ONE shuffle — re-nest all of a relation's vertices, ordered by
     // (member_pos, node_pos). sort_array on the struct gives lexicographic
@@ -151,7 +157,7 @@ object BoundaryExtract {
       .groupBy(col("relation_id"))
       .agg(sort_array(collect_list(struct(
         col("member_pos"), col("node_pos"), col("node_id"),
-        col("lat_dm"), col("lon_dm")))).as("pts"))
+        col("lat_dm"), col("lon_dm"), col("inner")))).as("pts"))
 
     // keep zero-segment relations: left join from the filtered relation set.
     // In shuffle mode grouped is already hash-partitioned on relation_id by
@@ -161,7 +167,8 @@ object BoundaryExtract {
       .join(maybeBroadcast(grouped, bcastSegs), Seq("relation_id"), "left")
       .select(col("relation_id"), col("tags"),
         coalesce(col("pts"), array().cast(
-          "array<struct<member_pos:int,node_pos:int,node_id:bigint,lat_dm:int,lon_dm:int>>"))
+          "array<struct<member_pos:int,node_pos:int,node_id:bigint,lat_dm:int,lon_dm:int," +
+            "inner:boolean>>"))
           .as("pts"))
       .as[RelSegments]
     withTags
@@ -170,11 +177,11 @@ object BoundaryExtract {
   /** Split the (member_pos, node_pos)-sorted flat vertex list back into
     * member-ordered segments — the form the greedy stitcher consumes.
     */
-  def splitSegments(rs: RelSegments): Seq[Seq[SegNode]] = {
+  def splitSegments(pts: Seq[SegPoint]): Seq[Seq[SegNode]] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Seq[SegNode]]
     var cur = scala.collection.mutable.ArrayBuffer.empty[SegNode]
     var curPos = Int.MinValue
-    rs.pts.foreach { p =>
+    pts.foreach { p =>
       if (p.member_pos != curPos && cur.nonEmpty) { out += cur.toSeq; cur = scala.collection.mutable.ArrayBuffer.empty }
       curPos = p.member_pos
       cur += SegNode(p.node_id, p.lat_dm, p.lon_dm)
@@ -183,24 +190,30 @@ object BoundaryExtract {
     out.toSeq
   }
 
-  /** Per-relation kernel: split flat vertices back into member-ordered
-    * segments, run the exact greedy stitch, convert coords, project name
+  /** The ring kernel every consumer shares: split (a subset of) one
+    * relation's sorted vertices into member-ordered segments and run the
+    * exact greedy stitch. Rings stay in decimicro.
+    */
+  private def ringsOf(pts: Seq[SegPoint]): Seq[Seq[SegNode]] =
+    RingAssembler.assemble(splitSegments(pts))
+
+  /** Exact reference conversion: (decimicro as f64 / 1e7) as f32
+    * (reference `converter.rs:141-149`).
+    */
+  private def toPt(n: SegNode): Pt =
+    Pt((n.latDm.toDouble / 10000000.0).toFloat, (n.lonDm.toDouble / 10000000.0).toFloat)
+
+  /** Per-relation kernel: stitch the rings, convert coords, project name
     * and admin_level (`/root/reference/src/converter.rs:31-149`).
     */
-  def assemblePolygon(rs: RelSegments): PolygonRow = {
-    val segments = splitSegments(rs)
-    val rings = RingAssembler.assemble(segments).map(_.map(n =>
-      // exact reference conversion: (decimicro as f64 / 1e7) as f32
-      // (/root/reference/src/converter.rs:141-149)
-      Pt((n.latDm.toDouble / 10000000.0).toFloat, (n.lonDm.toDouble / 10000000.0).toFloat)))
+  def assemblePolygon(rs: RelSegments): PolygonRow =
     PolygonRow(
       name = fullName(rs.tags),
-      rings = rings,
+      rings = ringsOf(rs.pts).map(_.map(toPt)),
       relation_id = rs.relation_id,
       admin_level = rs.tags.get("admin_level")
         .flatMap(s => if (s.matches("[+-]?[0-9]+")) scala.util.Try(s.toLong).toOption else None)
         .getOrElse(0L))
-  }
 
   /** `get_full_name` (`/root/reference/src/converter.rs:107-123`):
     * name default "UNKNOWN_NAME"; "{prefix}_{name}" when name:prefix
@@ -246,7 +259,7 @@ object BoundaryExtract {
       segs: Dataset[RelSegments]): Dataset[PolygonStatsRow] = {
     import spark.implicits._
     segs.map { rs =>
-      val rings = RingAssembler.assemble(splitSegments(rs))
+      val rings = ringsOf(rs.pts)
       val a2 = rings.map(r =>
         graft.geom.Geom.signedArea2Dm(r.map(_.latDm).toArray, r.map(_.lonDm).toArray))
       val pts = rings.flatten
@@ -284,7 +297,7 @@ object BoundaryExtract {
       maxAdmin: Int = 8): Dataset[CentroidRow] = {
     import spark.implicits._
     relSegments(spark, relations, ways, nodes, minAdmin, maxAdmin).flatMap { rs =>
-      val rings = RingAssembler.assemble(splitSegments(rs))
+      val rings = ringsOf(rs.pts)
       rings.headOption.flatMap(r =>
         graft.geom.Geom.centroidDm(r.map(_.latDm).toArray, r.map(_.lonDm).toArray))
         .map { case (la, lo) => CentroidRow(rs.relation_id, fullName(rs.tags), la, lo) }
@@ -324,7 +337,7 @@ object BoundaryExtract {
     import spark.implicits._
     val edges = segs
       .flatMap { rs =>
-        val rings = RingAssembler.assemble(splitSegments(rs))
+        val rings = ringsOf(rs.pts)
         val out = scala.collection.mutable.LinkedHashSet.empty[(Int, Int, Int, Int)]
         rings.foreach { r =>
           var i = 0
@@ -663,7 +676,7 @@ object BoundaryExtract {
       maxAdmin: Int = 8): Dataset[SimplifyRow] = {
     import spark.implicits._
     relSegments(spark, relations, ways, nodes, minAdmin, maxAdmin).map { rs =>
-      val rings = RingAssembler.assemble(splitSegments(rs))
+      val rings = ringsOf(rs.pts)
       val simp = rings.map(r =>
         graft.geom.Simplify.ring(r.map(_.latDm).toArray, r.map(_.lonDm).toArray, tolDm))
       SimplifyRow(
@@ -680,8 +693,8 @@ object BoundaryExtract {
   /** EXTENSION (north-star capability, opt-in — the reference ignores
     * roles): role-aware extraction. Inner-role rings become holes of the
     * outer ring containing them; winding normalized per RFC 7946
-    * (graft.geom.Holes). Same join/re-nest plan as `extract`, with `role`
-    * carried through.
+    * (graft.geom.Holes). The [[relSegments]] plan, keeping only relations
+    * with at least one surviving vertex; each role is stitched on its own.
     */
   def extractRfc7946(
       spark: SparkSession,
@@ -689,48 +702,15 @@ object BoundaryExtract {
       ways: DataFrame,
       nodes: DataFrame,
       minAdmin: Int = 8,
-      maxAdmin: Int = 8,
-      maxBroadcastMembers: Long = 10000000L): DataFrame = {
+      maxAdmin: Int = 8): DataFrame = {
     import spark.implicits._
-    val rels = filterAdminRelations(relations, minAdmin, maxAdmin)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val members = rels
-      .select(col("id").as("relation_id"),
-        posexplode(col("members")).as(Seq("member_pos", "m")))
-      .filter(col("m.member_type") === "way")
-      .select(col("relation_id"), col("member_pos"),
-        col("m.member_id").as("way_id"),
-        (col("m.role") === "inner").as("inner"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // same broadcast→shuffle auto-switch as extract (see its scaladoc)
-    val (bcastMembers, bcastSegs) = broadcastDecision(members, maxBroadcastMembers)
-    val waySegs = ways
-      .join(maybeBroadcast(members, bcastMembers), col("id") === col("way_id"))
-      .select(col("relation_id"), col("member_pos"), col("inner"),
-        posexplode(col("node_ids")).as(Seq("node_pos", "node_id")))
-    val verts = nodes
-      .join(maybeBroadcast(waySegs, bcastSegs), nodes("id") === waySegs("node_id"))
-      .select(col("relation_id"), col("member_pos"), col("node_pos"), col("inner"),
-        col("node_id"), col("decimicro_lat").as("lat_dm"), col("decimicro_lon").as("lon_dm"))
-    val grouped = verts
-      .groupBy(col("relation_id"))
-      .agg(sort_array(collect_list(struct(
-        col("member_pos"), col("node_pos"), col("node_id"),
-        col("lat_dm"), col("lon_dm"), col("inner")))).as("pts"))
-    rels.select(col("id").as("relation_id"), col("tags"))
-      .join(maybeBroadcast(grouped, bcastSegs), Seq("relation_id"))
-      .as[(Long, Map[String, String], Seq[(Int, Int, Long, Int, Int, Boolean)])]
-      .map { case (relId, tags, pts) =>
-        def ringsOf(inner: Boolean): Seq[Seq[graft.geom.Pt]] = {
-          val segs = pts.filter(_._6 == inner)
-            .groupBy(_._1).toSeq.sortBy(_._1)
-            .map(_._2.sortBy(_._2).map(p => SegNode(p._3, p._4, p._5)))
-          RingAssembler.assemble(segs).map(_.map(n =>
-            graft.geom.Pt((n.latDm.toDouble / 1e7).toFloat, (n.lonDm.toDouble / 1e7).toFloat)))
-        }
-        val polys = graft.geom.Holes.assignHoles(ringsOf(false), ringsOf(true))
-        val geom = graft.geom.Holes.geoJsonRfc7946(polys).orNull
-        (relId, fullName(tags), polys.length, polys.map(_.holes.length).sum, geom)
+    relSegments(spark, relations, ways, nodes, minAdmin, maxAdmin)
+      .filter(size(col("pts")) > 0)
+      .map { rs =>
+        def rings(inner: Boolean) = ringsOf(rs.pts.filter(_.inner == inner)).map(_.map(toPt))
+        val polys = graft.geom.Holes.assignHoles(rings(false), rings(true))
+        (rs.relation_id, fullName(rs.tags), polys.length, polys.map(_.holes.length).sum,
+          graft.geom.Holes.geoJsonRfc7946(polys).orNull)
       }
       .toDF("relation_id", "name", "n_polygons", "n_holes", "geometry_rfc7946")
   }

@@ -19,9 +19,6 @@ object Tiling {
   final case class TileRow(image_id: String, relation_id: Long, level: Int,
       tx: Int, ty: Int, tw: Int, th: Int, tile_bytes: Array[Byte])
 
-  /** 2× box downsample with integer rounding (deterministic). Odd edges keep
-    * the partial box.
-    */
   /** Bing-style quadkey for a tile coordinate — the canonical string key
     * for tile storage/lookup (Microsoft Bing Maps tile system, public):
     * digit d = 2·bit(ty,i) + bit(tx,i) from the high bit down, one digit
@@ -39,6 +36,9 @@ object Tiling {
         i => (bit(ty, i) * 2 + bit(tx, i)).cast("string"))))
   }
 
+  /** 2× box downsample with integer rounding (deterministic). Odd edges keep
+    * the partial box.
+    */
   def downsample2x(px: Array[Int], w: Int, h: Int): (Array[Int], Int, Int) = {
     val nw = (w + 1) / 2; val nh = (h + 1) / 2
     val out = new Array[Int](nw * nh)

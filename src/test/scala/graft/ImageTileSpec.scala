@@ -222,19 +222,4 @@ class SpatialJoinSpec extends AnyFunSuite {
 
     assert(got == want)
   }
-
-  test("salted shuffle path returns identical assignments") {
-    val (n, w, r) = graft.fixtures.OsmScenes.grid(4, 3).toDFs(spark)
-    val polys = graft.osm.BoundaryExtract.extract(spark, r, w, n, 8, 8)
-    val probes = spark.range(0, 300).select(
-      col("id").as("pid"),
-      graft.functions.GraftFunctions.latOfKey(col("id")).as("lat"),
-      graft.functions.GraftFunctions.lonOfKey(col("id")).as("lon"))
-    val a = graft.join.SpatialJoin.assign(spark, probes, polys, res = 6, idCol = "pid")
-      .select("pid", "relation_id").as[(Long, Long)].collect().toSet
-    val b = graft.join.SpatialJoin.assign(spark, probes, polys, res = 6, idCol = "pid",
-      useBroadcast = false, saltBuckets = 4)
-      .select("pid", "relation_id").as[(Long, Long)].collect().toSet
-    assert(a == b)
-  }
 }

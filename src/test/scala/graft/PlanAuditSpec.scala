@@ -348,14 +348,16 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  test("q157 salted assign really shuffles: salt key present, candidate join not broadcast") {
+  test("q157 assign: both joins broadcast, only the rollup shuffles") {
     val plan = SparkEntry.queries("q157_assign_salted")(spark, sf)
       .queryExecution.executedPlan.toString
-    // the candidate join must be the salted shuffle (that is the point);
-    // the rings re-attach stays broadcast (unique per polygon, small)
-    assert(plan.contains("salt"), s"salt column missing from q157 plan:\n$plan")
-    assert(plan.contains("Exchange hashpartitioning"),
-      s"q157 candidate join must shuffle on (cell, salt):\n$plan")
+    // candidate join and rings re-attach both broadcast the build side;
+    // the probe side streams, so the per-zone groupBy is the one exchange
+    assert(!plan.contains("salt"), s"salt column in q157 plan:\n$plan")
+    assert("BroadcastHashJoin".r.findAllIn(plan).length == 2,
+      s"q157 joins must both broadcast:\n$plan")
+    assert("Exchange hashpartitioning".r.findAllIn(plan).length == 1,
+      s"q157 must shuffle only for the per-zone rollup:\n$plan")
   }
 
   test("q147 focal and q149 areal plans: no window, no global sort, no cartesian") {

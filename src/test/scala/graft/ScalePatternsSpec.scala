@@ -3,63 +3,12 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** Evidence for the scale patterns the 100 TB design leans on: salting
-  * spreads a hot cell across partitions; bucketing co-locates a join with
-  * no exchange on the bucketed side; AQE is on in bench sessions.
+/** Evidence for the scale patterns the 100 TB design leans on: bucketing
+  * co-locates a join with no exchange on the bucketed side; BoundaryExtract
+  * switches its joins from broadcast to shuffle at its size threshold.
   */
 class ScalePatternsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
-  import spark.implicits._
-
-  test("salted spatial join spreads one hot cell over multiple shuffle partitions") {
-    // every probe in the SAME cell → unsalted shuffle join puts every row in
-    // one partition; salt S=8 must spread them
-    // per-row (non-constant) coordinates inside ONE cell — constant lat/lon
-    // would be constant-folded into a pushed filter and skip the shuffle
-    val probes = spark.range(0, 2000).select(
-      col("id").as("pid"),
-      (lit(10.01) + col("id") * 1e-7).as("lat"),
-      (lit(10.01) + col("id") * 1e-7).as("lon"))
-    val poly = graft.geom.PolygonRow("hot", Seq(Seq(
-      graft.geom.Pt(9f, 9f), graft.geom.Pt(9f, 12f),
-      graft.geom.Pt(12f, 12f), graft.geom.Pt(12f, 9f))), 1L, 8L)
-    val polys = spark.createDataset(Seq(poly))
-
-    def occupancy(useSalt: Int): Int = {
-      val assigned = graft.join.SpatialJoin.assign(spark, probes, polys, res = 8,
-        idCol = "pid", useBroadcast = false, saltBuckets = useSalt)
-      assigned.rdd.mapPartitions(it => Iterator.single(it.size)).collect().count(_ > 0)
-    }
-    // force the real shuffle-join path (Catalyst would auto-broadcast the
-    // tiny build side here, which is exactly what we DON'T get at 100 TB
-    // when the polygon side outgrows broadcast)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      assert(occupancy(1) == 1, "unsalted hot cell should land in one partition")
-      assert(occupancy(8) >= 4, "explicit salting should spread the hot cell")
-      // with AQE back on: the skew-join split also spreads it, salt-free.
-      // (thresholds lowered to make a 2000-row fixture "skewed" — production
-      // defaults are 256MB partitions, the same mechanism at 100 TB)
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.0")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "4KB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4KB")
-      assert(occupancy(1) >= 2, "AQE skew split should spread the hot cell")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.conf.unset("spark.sql.adaptive.forceOptimizeSkewedJoin")
-      spark.conf.unset("spark.sql.adaptive.skewJoin.skewedPartitionFactor")
-      spark.conf.unset("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
-      spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    }
-    // and the salted result is still correct
-    val n = graft.join.SpatialJoin.assign(spark, probes, polys, res = 8,
-      idCol = "pid", useBroadcast = false, saltBuckets = 8).count()
-    assert(n == 2000)
-  }
 
   test("bucketed tables join without a shuffle exchange on the bucketed sides") {
     val dir = java.nio.file.Files.createTempDirectory("graft-buckets").toString
