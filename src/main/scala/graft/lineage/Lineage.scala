@@ -35,7 +35,10 @@ object Lineage {
     }
   }
 
-  /** Run `body`, return (result, lineage rows of every task it executed). */
+  /** Run `body`, return (result, lineage rows of every task it executed).
+    * The rows come back as a one-partition frame: they are driver-sized,
+    * and writing them then takes one task and one file.
+    */
   def capture[A](spark: SparkSession, job: String)(body: => A): (A, DataFrame) = {
     import spark.implicits._
     val c = new Collector(job)
@@ -46,7 +49,7 @@ object Lineage {
       // has reached the collector; a stuck bus fails loudly after 5 s
       // rather than returning partial lineage
       ListenerBusDrain.waitUntilEmpty(spark.sparkContext, 5000L)
-      (result, c.rows.toSeq.toDF())
+      (result, spark.sparkContext.parallelize(c.rows.toSeq, 1).toDF())
     } finally {
       spark.sparkContext.removeSparkListener(c)
     }

@@ -594,12 +594,9 @@ object Similarity {
     val present = rewritten.select(col("cid")).distinct().collect()
       .map(_.getInt(0)).toSet
     // dynamic overwrite: replace exactly the partitions present in the
-    // rewrite set (session conf toggle - single-writer, as documented)
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try rewritten.write.mode("overwrite").partitionBy("cid").parquet(dir)
-    finally spark.conf.set(key, prev)
+    // rewrite set (a per-write option; the session conf is never touched)
+    rewritten.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("cid").parquet(dir)
     rewritten.unpersist(blocking = false)
     up.unpersist(blocking = false)
     // drained lists: no rows to write their partition with - drop the dir

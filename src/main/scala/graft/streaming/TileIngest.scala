@@ -103,7 +103,7 @@ object TileIngest {
         // would duplicate lineage rows when a batch is replayed after a
         // crash between this write and commit() — tiles and manifest were
         // idempotent under replay, lineage must be too. Partition column
-        // name is shared with TileManifest (see tileBatch there) so batch
+        // name is shared with TileManifest (see tileBatches there) so batch
         // and streaming lineage can coexist under one _lineage root.
         lineage.write.mode("overwrite")
           .parquet(s"$outDir/_lineage/lineage_batch=stream-$batchId")

@@ -1,20 +1,27 @@
 package graft.tile
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.lineage.Lineage
 
 /** Checkpoint-resumable tiling job (north rule).
   *
   * The image set is split into `nBatches` deterministic batches
-  * (`pmod(hash(image_id), n)` — the same split at any cluster size). Each
-  * batch is tiled and written to `outDir/tiles/batch=<b>/`, then a manifest
-  * entry `outDir/_manifest/batch-<b>.json` is committed atomically
-  * (temp-file + rename). Restart skips every batch with a committed
-  * manifest entry — Iceberg-snapshot-like semantics on plain Parquet
-  * (no Iceberg runtime in the sandbox, SURVEY.md §7.1). Per-batch lineage
-  * rows (task-level IO/timing) append to `outDir/_lineage/`.
+  * (`pmod(hash(image_id), n)` — the same split at any cluster size). One
+  * call tiles every pending batch in ONE Spark write job: a dynamic
+  * partition overwrite of `outDir/tiles`, partitioned by `batch`, replaces
+  * exactly the pending `tiles/batch=<b>/` directories. After the job, each
+  * pending batch commits a manifest entry `outDir/_manifest/batch-<b>.json`
+  * atomically (temp-file + rename) with the counts the write observed.
+  * Restart skips every batch with a committed manifest entry —
+  * Iceberg-snapshot-like semantics on plain Parquet (no Iceberg runtime in
+  * the sandbox, SURVEY.md §7.1). The call's lineage rows (task-level
+  * IO/timing) land in `outDir/_lineage/`.
+  *
+  * Commit contract: the pending batches of one call commit together. If
+  * the write job fails, no entry is committed and the next call redoes all
+  * of them.
   */
 object TileManifest {
 
@@ -50,84 +57,94 @@ object TileManifest {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** Deterministic batch of an image: the same split at any cluster size. */
+  private def batchCol(nBatches: Int) = pmod(hash(col("image_id")), lit(nBatches))
+
   /** Run (or resume) the tiling job. `assigned` needs image_id, relation_id,
     * bytes. Returns per-batch results including skips.
     *
-    * Scale shape: the input is scanned ONCE for the whole run — `assigned`
-    * is persisted (memory-and-disk) before the batch loop, each batch
-    * filter reads the cache, and per-batch image counts are derived from
-    * the tiles that were just written (every image emits exactly one
-    * level-0 origin tile) instead of a separate `count()` over the input.
-    * The r2 version re-ran the full upstream join twice per batch (one
-    * count + one tile pass × nBatches ≈ 16 input scans at 8 batches — a
-    * genuine 100 TB scale-killer hiding behind resumability). For inputs
-    * too large to cache — or when resume must survive a JVM crash — use
+    * Scale shape: the pending batches are filtered out of `assigned` and
+    * tiled in one write job, so the input is read once and no cache is
+    * needed. Each batch's image and tile counts ride that job as observed
+    * metrics. Resume after a JVM crash re-runs the upstream of every
+    * pending batch; where the upstream is the expensive part, use
     * [[runStaged]], which materializes the joined frame once as
-    * batch-partitioned parquet and lets partition pruning serve each batch.
+    * batch-partitioned parquet and lets partition pruning serve each resume.
     */
   def run(spark: SparkSession, assigned: DataFrame, outDir: String,
       nBatches: Int = 8): Seq[BatchResult] = {
-    val done = completedBatches(outDir)
-    val todo = (0 until nBatches).filterNot(done.contains)
-    if (todo.isEmpty) return (0 until nBatches).map(BatchResult(_, 0, 0, skipped = true))
-    val withBatch = assigned
-      .withColumn("batch", pmod(hash(col("image_id")), lit(nBatches)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      (0 until nBatches).map { b =>
-        if (done.contains(b)) BatchResult(b, 0, 0, skipped = true)
-        else tileBatch(spark, withBatch.filter(col("batch") === b).drop("batch"), outDir, b)
-      }
-    } finally withBatch.unpersist(blocking = false)
+    val pending = (0 until nBatches).filterNot(completedBatches(outDir).contains)
+    tileBatches(spark, assigned.filter(batchCol(nBatches).isin(pending: _*)), outDir,
+      nBatches, pending)
   }
 
-  /** One batch: tile + write with observed counts, commit. The counts
-    * ride the WRITE job via `observe` (Iceberg's writer-reported commit
-    * stats) — they count the rows actually streamed to the writer, in
-    * the same job, where the previous shape paid two extra read-back
-    * jobs per batch (full count + origin-tile count).
+  /** Tile `rows` (the pending batches' images) in one write job, then commit
+    * each pending batch with the counts the job observed; every other batch
+    * reads as skipped. The counts ride the WRITE job via `observe`
+    * (Iceberg's writer-reported commit stats): they count the rows actually
+    * streamed to the writer, with no read-back job. Dynamic partition
+    * overwrite replaces only the batches that got tiles; a pending batch
+    * with none cannot be replaced by nothing, so its old `tiles/batch=<b>`
+    * is deleted before its `0/0` entry commits.
     */
-  private def tileBatch(spark: SparkSession, slice: DataFrame, outDir: String,
-      b: Int): BatchResult = {
-    val ((nImages, nTiles), lineage) = Lineage.capture(spark, s"tile-batch-$b") {
-      val obs = org.apache.spark.sql.Observation(s"tile-batch-$b-${System.nanoTime()}")
-      Tiling.tile(spark, slice)
-        .observe(obs, count(lit(1)).as("tiles"),
-          count(when(col("level") === 0 && col("tx") === 0 && col("ty") === 0, 1))
-            .as("images"))
-        .write.mode("overwrite").parquet(s"$outDir/tiles/batch=$b")
-      val m = obs.get
-      (m("images").asInstanceOf[Long], m("tiles").asInstanceOf[Long])
+  private def tileBatches(spark: SparkSession, rows: DataFrame, outDir: String,
+      nBatches: Int, pending: Seq[Int]): Seq[BatchResult] = {
+    if (pending.isEmpty) return (0 until nBatches).map(BatchResult(_, 0, 0, skipped = true))
+    val ids = pending.mkString("-")
+    val origin = col("level") === 0 && col("tx") === 0 && col("ty") === 0
+    val counts = pending.flatMap { b =>
+      val in = col("batch") === b
+      Seq(count(when(in, 1)).as(s"tiles_$b"), count(when(in && origin, 1)).as(s"images_$b"))
     }
-    // batch-keyed overwrite (not append): a batch replayed after a
-    // crash between this write and commitManifest stays idempotent.
-    // Partition column `lineage_batch` is shared with TileIngest's
-    // streaming writer so both can land in one _lineage dir — two
-    // different partition-column names under one root would make
+    val (m, lineage) = Lineage.capture(spark, s"tile-batches-$ids") {
+      val obs = Observation(s"tile-batches-$ids-${System.nanoTime()}")
+      Tiling.tile(spark, rows).withColumn("batch", batchCol(nBatches))
+        .observe(obs, counts.head, counts.tail: _*)
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch").parquet(s"$outDir/tiles")
+      obs.get
+    }
+    // keyed by the pending set (not append): a call replayed after a crash
+    // between this write and the commits stays idempotent. Partition
+    // column `lineage_batch` is shared with TileIngest's streaming writer
+    // so both can land in one _lineage dir — two different
+    // partition-column names under one root would make
     // spark.read.parquet(_lineage) throw on partition discovery.
-    lineage.write.mode("overwrite").parquet(s"$outDir/_lineage/lineage_batch=batch-$b")
-    commitManifest(outDir, b, nImages, nTiles)
-    BatchResult(b, nImages, nTiles, skipped = false)
+    lineage.write.mode("overwrite").parquet(s"$outDir/_lineage/lineage_batch=batches-$ids")
+    (0 until nBatches).map { b =>
+      if (!pending.contains(b)) BatchResult(b, 0, 0, skipped = true)
+      else {
+        val tiles = m(s"tiles_$b").asInstanceOf[Long]
+        val images = m(s"images_$b").asInstanceOf[Long]
+        if (tiles == 0) rmrf(new java.io.File(s"$outDir/tiles/batch=$b"))
+        commitManifest(outDir, b, images, tiles)
+        BatchResult(b, images, tiles, skipped = false)
+      }
+    }
+  }
+
+  private def rmrf(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmrf)); f.delete(): Unit
   }
 
   /** Durable variant for genuinely huge inputs: materialize `assigned` ONCE
     * as parquet partitioned by `batch` (skipped when already staged), then
-    * each batch reads its slice back with partition pruning — the filter
-    * becomes a directory prune, never a scan of other batches.
+    * the pending batches read back with partition pruning — the filter
+    * becomes a directory prune, never a scan of committed batches.
     *
-    * vs `run`: the in-memory persist dies with the JVM, so a CRASHED run
-    * re-executes the upstream join for the remaining batches on restart;
-    * the staging survives, making resume zero-upstream-cost — at 100 TB
-    * (where the upstream is a multi-hour join) this is the shape that
-    * matters, at the price of one durable copy of the joined frame.
+    * vs `run`: a resume of `run` after a crash re-executes the upstream
+    * join for every pending batch; the staging survives, making resume
+    * zero-upstream-cost — at 100 TB (where the upstream is a multi-hour
+    * join) this is the shape that matters, at the price of one durable
+    * copy of the joined frame.
     */
   def runStaged(spark: SparkSession, assigned: DataFrame, outDir: String,
       nBatches: Int = 8): Seq[BatchResult] = {
-    val done = completedBatches(outDir)
+    val pending = (0 until nBatches).filterNot(completedBatches(outDir).contains)
     val stagedDir = s"$outDir/_staged"
     val metaPath = Paths.get(outDir, "_staged_meta.json")
     if (!Files.exists(Paths.get(stagedDir, "_SUCCESS"))) {
-      assigned.withColumn("batch", pmod(hash(col("image_id")), lit(nBatches)))
+      assigned.withColumn("batch", batchCol(nBatches))
         .write.mode("overwrite").partitionBy("batch").parquet(stagedDir)
       val tmp = Paths.get(outDir, "._staged_meta.json.tmp")
       Files.writeString(tmp, s"""{"n_batches":$nBatches,"schema_v":1}""")
@@ -136,20 +153,21 @@ object TileManifest {
     } else {
       // the batch split is baked into the staging — a resume with a
       // different nBatches would silently never tile the extra batches
-      val meta = Files.readString(metaPath)
-      val staged = """"n_batches":(\d+)""".r.findFirstMatchIn(meta)
-        .map(_.group(1).toInt)
-        .getOrElse(sys.error(s"unreadable $metaPath: $meta"))
+      val staged = stagedBatches(metaPath)
       require(staged == nBatches,
         s"$outDir was staged with n_batches=$staged but resumed with " +
           s"n_batches=$nBatches — delete $stagedDir to restage, or resume " +
           "with the original batch count")
     }
-    val staged = spark.read.parquet(stagedDir)
-    (0 until nBatches).map { b =>
-      if (done.contains(b)) BatchResult(b, 0, 0, skipped = true)
-      else tileBatch(spark, staged.filter(col("batch") === b).drop("batch"), outDir, b)
-    }
+    tileBatches(spark, spark.read.parquet(stagedDir).filter(col("batch").isin(pending: _*)),
+      outDir, nBatches, pending)
+  }
+
+  private def stagedBatches(metaPath: java.nio.file.Path): Int = {
+    val meta = Files.readString(metaPath)
+    """"n_batches":(\d+)""".r.findFirstMatchIn(meta)
+      .map(_.group(1).toInt)
+      .getOrElse(sys.error(s"unreadable $metaPath: $meta"))
   }
 
   /** Incremental refresh of a completed [[runStaged]] output: apply an
@@ -158,67 +176,51 @@ object TileManifest {
     * — the CDC-driven maintenance path, O(changed batches) like the
     * snapshot table's merge, against O(corpus) for a rebuild.
     *
-    * Per affected batch: the old slice reads back partition-PRUNED from
-    * the staging, changed ids anti-join out, upserts union in; the new
-    * slice is eagerly localCheckpointed BEFORE the staging partition is
-    * overwritten (the read and the write touch the same directory — the
-    * checkpoint is what makes the swap safe), then the batch re-tiles and
-    * re-commits its manifest entry. Untouched batches: zero reads, zero
-    * writes. The staging swap is not atomic; the manifest entry remains
-    * the commit point, and a crashed refresh is safe to re-run with the
-    * same (deterministic) delta.
+    * The affected batches' old slices read back partition-PRUNED from the
+    * staging, changed ids anti-join out, upserts union in; the new slices
+    * are eagerly localCheckpointed BEFORE the staging is overwritten (the
+    * read and the write touch the same directories — the checkpoint is
+    * what makes the swap safe). One dynamic-overwrite job replaces the
+    * affected staging partitions, one [[tileBatches]] job re-tiles them,
+    * and their manifest entries re-commit. A batch the delta drained
+    * commits `0/0` and loses its tiles and staging partitions. Untouched
+    * batches: zero reads, zero writes. The staging swap is not atomic; the
+    * manifest entries remain the commit point, and a crashed refresh is
+    * safe to re-run with the same (deterministic) delta.
     */
   def refreshStaged(spark: SparkSession, upserts: DataFrame, deleteIds: DataFrame,
       outDir: String): Seq[BatchResult] = {
     val stagedDir = s"$outDir/_staged"
     val metaPath = Paths.get(outDir, "_staged_meta.json")
     require(Files.exists(metaPath), s"no staged tiling run at $outDir to refresh")
-    val nBatches = """"n_batches":(\d+)""".r
-      .findFirstMatchIn(Files.readString(metaPath))
-      .map(_.group(1).toInt)
-      .getOrElse(sys.error(s"unreadable $metaPath"))
-    def batched(df: DataFrame) =
-      df.withColumn("batch", pmod(hash(col("image_id")), lit(nBatches)))
-    val up = batched(upserts)
-    val del = batched(deleteIds.select(col("image_id")))
+    val nBatches = stagedBatches(metaPath)
+    val up = upserts.withColumn("batch", batchCol(nBatches))
+    val del = deleteIds.select(col("image_id")).withColumn("batch", batchCol(nBatches))
     // metadata-sized by construction: ≤ nBatches values
     val affected = up.select(col("batch")).union(del.select(col("batch")))
-      .distinct().collect().map(_.getInt(0)).sorted
+      .distinct().collect().map(_.getInt(0)).sorted.toSeq
     if (affected.isEmpty)
       return (0 until nBatches).map(BatchResult(_, 0, 0, skipped = true))
     val changedIds = up.select(col("image_id"))
       .union(del.select(col("image_id"))).distinct()
-    val oldSlices = spark.read.parquet(stagedDir)
-      .filter(col("batch").isin(affected.map(Int.box): _*)) // partition prune
+    // refreshes that deleted every staged image leave no data file for
+    // schema inference: the old slices are then empty
+    val walk = Files.walk(Paths.get(stagedDir))
+    val hasFiles =
+      try walk.anyMatch(p => p.toString.endsWith(".parquet"))
+      finally walk.close()
+    val oldSlices = (if (hasFiles) spark.read.parquet(stagedDir) else up.limit(0))
+      .filter(col("batch").isin(affected: _*)) // partition prune
     val newSlices = oldSlices.join(changedIds, Seq("image_id"), "left_anti")
       .unionByName(up)
       .localCheckpoint(true) // delta-sized; severs lineage from stagedDir
     try {
-      val res = affected.toSeq.map { b =>
-        val slice = newSlices.filter(col("batch") === b).drop("batch")
-        slice.write.mode("overwrite").parquet(s"$stagedDir/batch=$b")
-        // a delta can drain a batch completely: the staging partition
-        // then holds only _SUCCESS, and both the staging read-back and
-        // tileBatch's written-tiles read-back would fail schema
-        // inference — short-circuit: drop the batch's stale tiles and
-        // commit an empty manifest entry
-        val walk = Files.walk(Paths.get(s"$stagedDir/batch=$b"))
-        val hasFiles =
-          try walk.anyMatch(p => p.toString.endsWith(".parquet"))
-          finally walk.close()
-        if (hasFiles)
-          tileBatch(spark, spark.read.parquet(s"$stagedDir/batch=$b"), outDir, b)
-        else {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-          }
-          rm(new java.io.File(s"$outDir/tiles/batch=$b"))
-          commitManifest(outDir, b, 0, 0)
-          BatchResult(b, 0, 0, skipped = false)
-        }
-      }
-      res ++ (0 until nBatches).filterNot(affected.contains)
-        .map(BatchResult(_, 0, 0, skipped = true))
+      newSlices.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch").parquet(stagedDir)
+      val res = tileBatches(spark, newSlices, outDir, nBatches, affected)
+      res.filter(r => !r.skipped && r.tiles == 0)
+        .foreach(r => rmrf(new java.io.File(s"$stagedDir/batch=${r.batch}")))
+      res
     } finally newSlices.unpersist(blocking = false)
   }
 }

@@ -692,8 +692,12 @@ class SimilaritySpec extends AnyFunSuite {
       .flatMap(d => d.listFiles()).map(f => f.getPath -> f.lastModified()).toMap
     val affectedUp = spark.read.parquet(dir)
       .filter($"vec_id".isin(7L, 11L)).select("cid").as[Int].collect().toSet
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(modeKey)
     val n = Similarity.ivfRefresh(spark, dir, upserts, deletes)
     assert(n > 0)
+    // dynamic overwrite is a per-write option: the session conf is untouched
+    assert(spark.conf.getOption(modeKey) === modeBefore)
     // the drained list's partition directory is gone
     assert(!new java.io.File(dir, s"cid=$drainCid").exists(),
       s"drained list cid=$drainCid must be dropped")

@@ -99,10 +99,66 @@ class TilingSpec extends AnyFunSuite {
     // lineage rows recorded with task-level metrics
     val lin = spark.read.parquet(s"$dir/_lineage")
     assert(lin.count() > 0)
-    assert(lin.select("job").distinct().count() >= 4)
+    // one lineage label per call: r1 tiled all four batches, r3 only batch 2;
+    // each label's written rows are exactly the tiles that call committed
+    val labels = lin.select("job").distinct().collect().map(_.getString(0)).toSet
+    assert(labels == Set("tile-batches-0-1-2-3", "tile-batches-2"))
+    val written = lin.groupBy("job").agg(sum("records_written")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(written == Map("tile-batches-0-1-2-3" -> totalTiles, "tile-batches-2" -> r3(2).tiles))
     // tiles on disk = sum of manifest counts
     val onDisk = spark.read.parquet(s"$dir/tiles").count()
     assert(onDisk == totalTiles)
+  }
+
+  test("manifest: one call writes every pending batch in one stage") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-onestage").toString
+    val images = ImageTable.generate(spark, 30, 4).toDF()
+      .withColumn("relation_id", lit(1L))
+    TileManifest.run(spark, images, dir, nBatches = 4)
+    val writers = spark.read.parquet(s"$dir/_lineage").filter(col("records_written") > 0)
+    assert(writers.count() > 0)
+    assert(writers.select("stage_id").distinct().count() == 1)
+  }
+
+  test("manifest: a failed call commits no batch; the rerun commits all of them") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-allornothing").toString
+    val images = ImageTable.generate(spark, 30, 4).toDF()
+      .withColumn("relation_id", lit(1L))
+    val corrupt = images.limit(1).withColumn("image_id", lit("img_corrupt"))
+      .withColumn("bytes", lit(Array[Byte](1, 2, 3)))
+    intercept[Exception](TileManifest.run(spark, images.unionByName(corrupt), dir, nBatches = 4))
+    assert(TileManifest.completedBatches(dir).isEmpty)
+
+    val r = TileManifest.run(spark, images, dir, nBatches = 4)
+    assert(r.forall(!_.skipped) && r.map(_.images).sum == 30)
+    assert(TileManifest.completedBatches(dir) == Set(0, 1, 2, 3))
+    assert(spark.read.parquet(s"$dir/tiles").count() == r.map(_.tiles).sum)
+  }
+
+  test("manifest: empty batches commit 0/0 and drop stale tiles") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft-emptybatch").toString
+    val images = ImageTable.generate(spark, 3, 1).toDF()
+      .withColumn("relation_id", lit(1L))
+    val full = images.select(pmod(hash(col("image_id")), lit(8))).collect()
+      .map(_.getInt(0)).toSet
+    val empty = (0 until 8).filterNot(full)
+    assert(empty.nonEmpty)
+    // tiles left behind by an earlier run of the same output dir
+    val stale = empty.map(b => Paths.get(dir, "tiles", s"batch=$b"))
+    stale.foreach { d =>
+      Files.createDirectories(d); Files.write(d.resolve("part-x.parquet"), Array[Byte](0))
+    }
+    val r = TileManifest.run(spark, images, dir, nBatches = 8)
+    for (b <- empty) {
+      assert(r(b) == TileManifest.BatchResult(b, 0, 0, skipped = false))
+      assert(Files.readString(Paths.get(dir, "_manifest", s"batch-$b.json"))
+        .contains(""""images":0,"tiles":0"""))
+    }
+    stale.foreach(d => assert(!Files.exists(d), s"stale $d survived"))
+    assert(r.map(_.images).sum == 3)
+    assert(spark.read.parquet(s"$dir/tiles").count() == r.map(_.tiles).sum)
   }
 
   test("runStaged: upstream materialized once, batches partition-pruned, crash-resume skips upstream") {
@@ -195,6 +251,25 @@ class TilingSpec extends AnyFunSuite {
     val left = spark.read.parquet(s"$dir/tiles")
       .select("image_id").distinct().as[String].collect().toSet
     assert(left === base.select("image_id").as[String].collect().toSet -- victimIds)
+  }
+
+  test("refreshStaged after a delta that deleted every staged image") {
+    import spark.implicits._
+    def withRel(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("relation_id", lit(1L))
+    val dir = java.nio.file.Files.createTempDirectory("graft-drainall").toString
+    val base = withRel(ImageTable.generate(spark, 12, 2).toDF())
+    TileManifest.runStaged(spark, base, dir, nBatches = 4)
+    val all = TileManifest.refreshStaged(spark,
+      withRel(ImageTable.generate(spark, 0, 1).toDF()), base.select("image_id"), dir)
+    assert(all.forall(r => r.images == 0 && r.tiles == 0))
+    // the next refresh finds no staged data file and sees only its own delta
+    val inserts = withRel(spark.range(40, 41).as[Long].map(ImageTable.makeRow).toDF())
+    val res = TileManifest.refreshStaged(spark, inserts, Seq.empty[String].toDF("image_id"), dir)
+    assert(res.map(_.images).sum == 1)
+    assert(spark.read.parquet(s"$dir/tiles").select("image_id").distinct()
+      .as[String].collect().toSeq == Seq("img_000000040"))
+    assert(spark.read.parquet(s"$dir/_staged").count() == 1)
   }
 }
 
