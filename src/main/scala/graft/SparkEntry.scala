@@ -1940,8 +1940,9 @@ object SparkEntry {
     // region growing (drive-time-zone rings) seeded at two polygons:
     // the SW corner and an interior cell. On the flush grid the minimum
     // hop count IS the min Manhattan distance to a seed, so the oracle
-    // is closed form while the Spark side runs the real level-
-    // synchronous frontier loop (max hop 12 → 13 rounds here).
+    // is closed form while Bfs.hops walks the graph level by level (max
+    // hop 12). The 128-node grid fits the broadcast threshold, so the
+    // walk runs in driver memory; BfsSpec pins the blocked Spark loop.
     "q159_bfs_hops" -> ((s, dir) => {
       import s.implicits._
       val (n, w, r) = OsmScenes.sharedGrid(16, 8).toDFs(s)

@@ -125,6 +125,9 @@ object CellIndex {
     val y0 = yOf(minLat, res); val y1 = yOf(maxLat, res)
     require((x1 - x0 + 1) * (y1 - y0 + 1) <= maxCells.toLong,
       s"cover at res=$res would scan ${(x1 - x0 + 1) * (y1 - y0 + 1)} cells (> $maxCells); use coverAuto")
+    // rings decoded from a Dataset are Lists: index them once here, not
+    // once per scanned cell inside the kernels
+    val indexed = rings.map(_.toIndexedSeq)
     val out = scala.collection.mutable.ArrayBuffer.empty[Long]
     var cx = x0
     while (cx <= x1) {
@@ -132,7 +135,7 @@ object CellIndex {
       while (cy <= y1) {
         val c = pack(res, cx, cy)
         val (bLat0, bLon0, bLat1, bLon1) = bounds(c)
-        if (Geom.ringsIntersectRect(rings, bLat0, bLon0, bLat1, bLon1)) out += c
+        if (Geom.ringsIntersectRect(indexed, bLat0, bLon0, bLat1, bLon1)) out += c
         cy += 1
       }
       cx += 1

@@ -28,24 +28,35 @@ object Geom {
     * exact-boundary probes except where the expected value is pinned.
     */
   def rayCastContainsRing(ring: Seq[Pt], lat: Double, lon: Double): Boolean = {
+    if (ring.lengthCompare(3) < 0) return false
     var inside = false
-    val n = ring.length
-    if (n < 3) return false
-    var i = 0
-    var j = n - 1
-    while (i < n) {
-      val yi = ring(i).lat.toDouble; val xi = ring(i).lon.toDouble
-      val yj = ring(j).lat.toDouble; val xj = ring(j).lon.toDouble
+    // one pass with the previous vertex carried along: O(V) for a List
+    // (what a Dataset decodes rings to) as well as for an indexed Seq
+    var pj = ring.last
+    val it = ring.iterator
+    while (it.hasNext) {
+      val pi = it.next()
+      val yi = pi.lat.toDouble; val xi = pi.lon.toDouble
+      val yj = pj.lat.toDouble; val xj = pj.lon.toDouble
       // edge (j -> i); cast ray in +lon direction at latitude `lat`
       if (((yi > lat) != (yj > lat)) &&
           (lon < (xj - xi) * (lat - yi) / (yj - yi) + xi)) {
         inside = !inside
       }
-      j = i
-      i += 1
+      pj = pi
     }
     inside
   }
+
+  /** The closed ring's edges (v0, v1), …, (v(n-1), v0) in one pass. */
+  private def existsEdge(ring: Seq[Pt])(f: (Pt, Pt) => Boolean): Boolean =
+    ring.nonEmpty && {
+      val it = ring.iterator
+      var a = it.next()
+      var hit = false
+      while (!hit && it.hasNext) { val b = it.next(); hit = f(a, b); a = b }
+      hit || f(a, ring.head)
+    }
 
   /** Union-of-rings containment: the reference emits every ring of a relation
     * as a free-standing exterior ring (roles ignored, holes not subtracted —
@@ -208,15 +219,11 @@ object Geom {
     val rectEdges = Seq(
       (minLon, minLat, maxLon, minLat), (maxLon, minLat, maxLon, maxLat),
       (maxLon, maxLat, minLon, maxLat), (minLon, maxLat, minLon, minLat))
-    rings.exists { ring =>
-      val n = ring.length
-      (0 until n).exists { i =>
-        val a = ring(i); val b = ring((i + 1) % n)
-        rectEdges.exists { case (x1, y1, x2, y2) =>
-          segmentsIntersect(a.lon, a.lat, b.lon, b.lat, x1, y1, x2, y2)
-        }
+    rings.exists(ring => existsEdge(ring) { (a, b) =>
+      rectEdges.exists { case (x1, y1, x2, y2) =>
+        segmentsIntersect(a.lon, a.lat, b.lon, b.lat, x1, y1, x2, y2)
       }
-    }
+    })
   }
 
   /** Euclidean distance in (lat, lon) degree space — the kNN metric.

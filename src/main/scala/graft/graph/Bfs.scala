@@ -1,14 +1,25 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
+import scala.collection.mutable
 
 /** Multi-source BFS hop distance over an undirected edge list — the
   * graph-geodesic form of region growing: seeded at a polygon set over
   * the rook-contiguity graph it yields "rings of adjacency" (the
   * drive-time-zone / contamination-spread primitive); seeded at a page
   * set over a link graph it is the crawl-frontier depth.
+  *
+  * Size gate ([[hops]]): a graph as small as a broadcast side — edge rows
+  * · 64 ≤ `spark.sql.autoBroadcastJoinThreshold`, counted on a local
+  * checkpoint of the edge list — is collected and walked level by level
+  * in driver memory: two Spark jobs in all, where the blocked loop below
+  * pays a checkpoint + probe job per block and one job per shuffle stage
+  * under AQE, and plans and compiles every round. The blocked loop stays
+  * the path for graphs that do not fit on the driver, for sessions with
+  * broadcasting off, and for the all-pairs variants.
   *
   * Level-synchronous frontier expansion, run as BLOCKED round fusion:
   * the per-round step is a SINGLE self-edge-augmented join + one hash
@@ -42,8 +53,6 @@ import org.apache.spark.storage.StorageLevel
   * never re-embeds its upstream more than `blockRounds` times.
   */
 object Bfs {
-
-  private val lvl = StorageLevel.MEMORY_AND_DISK
 
   /** Run `body(cur, roundNo)` as lazily-chained rounds with a
     * localCheckpoint + count() at each block boundary; returns the
@@ -122,6 +131,14 @@ object Bfs {
     (n, Seq(n))
   }
 
+  /** Rows that fit the session's broadcast threshold at the ~64
+    * bytes/row of [[joinSide]]; -1 when broadcasting is off.
+    */
+  private def broadcastRows(spark: SparkSession): Long = {
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold > 0) threshold / 64 else -1L
+  }
+
   /** Materialize the loop-invariant edge view once (eager local
     * checkpoint — one job, plan cut to a leaf) and decide its join side
     * from the MEASURED row count against the session's own broadcast
@@ -138,11 +155,10 @@ object Bfs {
     // measures it (an eager checkpoint would pay a second, separate job
     // for the count)
     val cp = edgeView.localCheckpoint(false)
-    val threshold = cp.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     val n = cp.count()
     if (sys.env.contains("GRAFT_LOOP_DEBUG")) System.err.println(
       f"[joinSide] rows=$n sec=${(System.nanoTime()-t0)/1e9}%.3f")
-    if (threshold > 0 && n * 64 <= threshold) broadcast(cp) else cp
+    if (n <= broadcastRows(cp.sparkSession)) broadcast(cp) else cp
   }
 
   /** Directed edge view with one self-edge per node (`self` = 1):
@@ -164,14 +180,87 @@ object Bfs {
     * the undirected `edges` (rel_a, rel_b) — the contiguity schema, so
     * [[graft.osm.BoundaryExtract.contiguity]] and
     * [[graft.geom.PointPattern.distanceBand]] outputs drop straight in.
+    *
+    * Size gate: the edge list is materialized once (lazy local
+    * checkpoint, counted in one job). When it and the seeds each fit the
+    * broadcast rule of [[joinSide]] (rows · 64 ≤
+    * `spark.sql.autoBroadcastJoinThreshold`) and hold no null id, both
+    * are collected, the BFS runs in driver memory and its rows come back
+    * as a local frame. Otherwise — a bigger graph, or a session with the
+    * threshold at -1 — the blocked Spark loop runs over the same
+    * checkpoint, so the edge upstream is evaluated once on either path.
+    * Both paths return the same rows and keep the same `maxRounds`
+    * contract: converging in exactly `maxRounds` rounds succeeds,
+    * needing more throws.
     */
   def hops(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
       maxRounds: Int = 256, blockRounds: Int = 8): DataFrame = {
     val und = edges.select(col("rel_a").cast("long").as("src"),
-      col("rel_b").cast("long").as("dst"))
+      col("rel_b").cast("long").as("dst")).localCheckpoint(false)
+    val seedIds = seeds.select(col("id").cast("long").as("src"))
+    val cap = broadcastRows(spark)
+    // one job fills the checkpoint and measures it, so neither path
+    // evaluates the upstream again; counted on the RDD because
+    // Dataset.count() would add a shuffle stage for its global aggregate
+    if (und.queryExecution.toRdd.count() <= cap) {
+      val e = und.collect()
+      val s = seedIds.limit(math.min(cap + 1, Int.MaxValue).toInt).collect()
+      // a null id goes to the blocked loop, whose join drops it
+      if (s.length <= cap && !e.exists(r => r.isNullAt(0) || r.isNullAt(1)) &&
+          !s.exists(_.isNullAt(0))) {
+        val rows = localHops(e.map(r => (r.getLong(0), r.getLong(1))).toSeq,
+          s.map(_.getLong(0)).toSeq, maxRounds)
+        return spark.createDataFrame(rows.map { case (id, h) => Row(id, h) }.asJava,
+          hopsSchema)
+      }
+    }
+    blockedHops(und, seedIds.distinct(), maxRounds, blockRounds)
+  }
+
+  /** The blocked loop's output schema: `hops` comes out of a struct
+    * `min`, so it is nullable there.
+    */
+  private val hopsSchema = StructType(Seq(StructField("id", LongType, nullable = false),
+    StructField("hops", LongType, nullable = true)))
+
+  /** Level-synchronous multi-source BFS over an in-memory undirected edge
+    * list, with [[runBlocked]]'s `maxRounds` contract: a graph whose
+    * farthest node is `maxRounds` levels out converges (the next round
+    * finds nothing new), one level more throws.
+    */
+  private def localHops(edges: Seq[(Long, Long)], seeds: Seq[Long],
+      maxRounds: Int): Seq[(Long, Long)] = {
+    val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
+    def link(a: Long, b: Long): Unit =
+      adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty[Long]) += b
+    edges.foreach { case (a, b) => link(a, b); link(b, a) }
+    val hops = mutable.LongMap.empty[Long]
+    seeds.foreach(hops(_) = 0L)
+    var frontier: Iterable[Long] = hops.keys.toSeq
+    var level = 0L
+    while (frontier.nonEmpty) {
+      val next = mutable.ArrayBuffer.empty[Long]
+      for (v <- frontier; u <- adj.getOrElse(v, Nil) if !hops.contains(u)) {
+        hops(u) = level + 1
+        next += u
+      }
+      if (next.nonEmpty) {
+        level += 1
+        if (level > math.max(maxRounds, 0)) throw new IllegalStateException(
+          s"Bfs.hops did not converge within $maxRounds rounds")
+      }
+      frontier = next
+    }
+    hops.toSeq
+  }
+
+  /** The blocked Spark loop behind [[hops]]: one self-edge-augmented join
+    * + aggregation per round, `blockRounds` rounds per checkpoint.
+    */
+  private def blockedHops(und: DataFrame, seedIds: DataFrame, maxRounds: Int,
+      blockRounds: Int): DataFrame = {
     val dir = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-    val seedIds = seeds.select(col("id").cast("long").as("src")).distinct()
     val dirPlus = joinSide(withSelfEdges(dir, Some(seedIds)))
     val init = seedIds.select(col("src").as("id"))
       .withColumn("hops", lit(0L)).withColumn("fresh", lit(1))

@@ -67,7 +67,6 @@ object Flac {
     private var cur = 0L
     private var nbits = 0
     def bytePos: Int = pos - (nbits >> 3)
-    def atByteBoundary: Boolean = nbits % 8 == 0
     private def fill(n: Int): Unit = {
       while (nbits < n) {
         if (pos >= bytes.length) throw new IllegalArgumentException("FLAC: truncated stream")
@@ -97,7 +96,6 @@ object Flac {
       q
     }
     def alignByte(): Unit = { nbits -= nbits % 8 }
-    def hasMore: Boolean = nbits > 0 || pos < bytes.length
   }
 
   // ——— CRCs (spec §9.1/§9.3: CRC-8 poly 0x07, CRC-16 poly 0x8005, init 0) ———

@@ -3,11 +3,12 @@ package graft.osm
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Operator F2 — admin-level range predicate
-  * (`/root/reference/src/osm_reader.rs:45-53`), plus the output-side i64
-  * parse (`/root/reference/src/converter.rs:131`). The same tag is parsed
+/** Operator F2 — admin-level range predicate (the reference's
+  * `src/osm_reader.rs:45-53`). The same tag is parsed
   * with TWO different defaults (SURVEY.md §1.2): i8 with default 127 on the
-  * filter side, i64 with default 0 on the output side — both preserved.
+  * filter side (here), i64 with default 0 on the output side
+  * (its `src/converter.rs:131`, in [[BoundaryExtract.assemblePolygon]])
+  * — both preserved.
   */
 object AdminLevel {
 
@@ -41,10 +42,4 @@ object AdminLevel {
       when(tag.rlike("^[+-]?[0-9]+$") && asLong.between(-128, 127), asLong.cast("int")),
       lit(127))
   }
-
-  /** Output-side parse (converter.rs:131): i64, default 0. */
-  def adminLevelI64Col(tag: Column): Column =
-    coalesce(
-      when(tag.rlike("^[+-]?[0-9]+$"), tag.try_cast("bigint")),
-      lit(0L))
 }

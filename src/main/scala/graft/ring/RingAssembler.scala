@@ -83,11 +83,4 @@ object RingAssembler {
     }
     result.map(_.toSeq).toSeq
   }
-
-  /** True iff the stitched path is a closed ring (head id == tail id) with at
-    * least 4 nodes (triangle + repeated close node). Not enforced by the
-    * reference — exposed for diagnostics/tests.
-    */
-  def isClosed(path: Seq[SegNode]): Boolean =
-    path.length >= 4 && path.head.id == path.last.id
 }

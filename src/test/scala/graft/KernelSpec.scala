@@ -1,6 +1,8 @@
 package graft
 
+import org.scalatest.concurrent.TimeLimits
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 import graft.osm.AdminLevel
 import graft.naming.Naming
 import graft.ring.RingAssembler
@@ -215,7 +217,7 @@ class EmittersSpec extends AnyFunSuite {
   }
 }
 
-class GeomSpec extends AnyFunSuite {
+class GeomSpec extends AnyFunSuite with TimeLimits {
   private val square = Seq(Pt(0f, 0f), Pt(0f, 10f), Pt(10f, 10f), Pt(10f, 0f))
   private val concave = // C-shape opening right
     Seq(Pt(0f, 0f), Pt(6f, 0f), Pt(6f, 6f), Pt(5f, 6f), Pt(5f, 1f), Pt(1f, 1f), Pt(1f, 6f), Pt(0f, 6f))
@@ -242,6 +244,24 @@ class GeomSpec extends AnyFunSuite {
     assert(Geom.ringsIntersectRect(Seq(square), 4, 4, 5, 5)) // rect fully inside
     assert(Geom.ringsIntersectRect(Seq(square), 4, -5, 5, 15)) // crosses two edges
     assert(!Geom.ringsIntersectRect(Seq(square), 20, 20, 30, 30))
+  }
+  test("a 100k-vertex List ring is walked once per call, with the Vector ring's answers") {
+    // rings decoded from a Dataset are Lists: indexing one per vertex
+    // would walk ~5e9 list nodes per call
+    val n = 100000
+    val vec = Vector.tabulate(n) { i =>
+      val t = 2 * math.Pi * i / n
+      Pt((10 * math.sin(t)).toFloat, (10 * math.cos(t)).toFloat)
+    }
+    val list = vec.toList
+    val probes = Seq((0.0, 0.0), (9.99, 0.0), (20.0, 20.0), (-3.0, 7.0))
+    failAfter(Span(5, Seconds)) {
+      for ((la, lo) <- probes)
+        assert(Geom.containsPoint(Seq(list), la, lo) == Geom.containsPoint(Seq(vec), la, lo))
+      // a rect clear of the ring reaches the edge-crossing scan
+      assert(!Geom.ringsIntersectRect(Seq(list), 20, 20, 30, 30))
+      assert(Geom.ringsIntersectRect(Seq(list), 9.5, -1, 11, 1))
+    }
   }
 }
 
