@@ -1805,7 +1805,7 @@ object SparkEntry {
         .withColumnRenamed("relation_id", "dst_id")
       val values = s.range(0, 5).select((col("id") + 7000L).as("src_id"),
         (col("id") + 1L).as("v"))
-      graft.geom.Raster.arealInterp(src, dst, values, broadcastDst = true)
+      graft.geom.Raster.arealInterp(src, dst, values)
     }),
 
     // per-image Otsu auto-threshold — the binarization front end of the
@@ -3188,7 +3188,7 @@ object SparkEntry {
     // Exact top-k here is the q27 bounded-fixture form; at corpus
     // scale the candidate generation is the IVF path (q52) feeding the
     // SAME mutual filter + CC. One semi-join for mutuality; CC via
-    // Dedup.connectedComponents (auto algorithm).
+    // Dedup.connectedComponents.
     "q244_mutual_knn" -> ((s, dir) => {
       val lab = mutualKnnClusters(s, dir)
       lab.join(lab.groupBy(col("cluster"))
@@ -3994,7 +3994,7 @@ object SparkEntry {
     }),
 
     // duplicate-cluster assembly: verified near-dup pairs → connected
-    // components (min-label propagation; the step that turns pairs into one
+    // components (Dedup.connectedComponents; the step that turns pairs into one
     // keeper per cluster). Three planted tiers chained A–B–C by adjacent
     // pairs only, so the component requires TRANSITIVE closure — oracled
     // against a DuckDB recursive-CTE reachability fixpoint.

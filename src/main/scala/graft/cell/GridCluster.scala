@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * occupied-cell set is one distinct whose output is bounded by the
   * GRID (4^res cells), not the corpus; adjacency is the broadcast
   * 9-offset ring + one cell-keyed semi-join; components run on the
-  * occupied-cell graph (grid-sized, via [[graft.dedup.Dedup]]'s auto
-  * path); the per-cluster stats are one groupBy each. The corpus is
+  * occupied-cell graph (grid-sized, via
+  * [[graft.dedup.Dedup.connectedComponents]]); the per-cluster stats are one groupBy each. The corpus is
   * scanned exactly twice (cell assignment feeds both the occupied set
   * and the final point count — persisted between them) and never joins
   * itself.

@@ -250,93 +250,43 @@ object Dedup {
     * turns verified pairs into DUPLICATE CLUSTERS (one keeper per
     * component).
     *
-    * Three execution paths, picked by graph size and `algorithm`:
+    * Two execution paths, picked by the edge list's size alone:
     *
-    *  1. Driver union-find cutover (`smallGraphEdges` > 0, default 250k —
-    *     sized so the collected Rows + boxed union-find state stay well
-    *     under a default 1g driver heap): the verified-pair graph is
-    *     METADATA-sized relative to any corpus (it exists only where
-    *     near-dups were confirmed), so when an early-terminating
-    *     `limit(cap+1)` scan proves the edge list fits, union-find on the
-    *     driver replaces 3-20 rounds of Spark jobs — the same medicine
-    *     that took the cell-kNN query from 7.6 s to 0.6 s. Raise the cap
-    *     only alongside driver memory.
-    *  2. `algorithm = "auto"` (default): min-label propagation for a few
-    *     probe rounds — near-dup graphs are overwhelmingly star/clique
-    *     shaped (diameter 2-3) and converge inside the probe — then, if
-    *     the probe has not converged, restart with star contraction. The
-    *     probe rounds are the cheapest possible diameter test (each is one
-    *     join + groupBy-min on the label frame); an adversarial chain
-    *     wastes `autoProbeRounds` rounds and still finishes in O(log n).
-    *  3. `algorithm = "propagate"`: iterative min-label propagation — one
-    *     self-equi-join + groupBy-min per round, O(diameter) rounds. Right
-    *     for star/clique-shaped near-dup graphs (diameter 2-3).
-    *  4. `algorithm = "star"`: large-star/small-star alternation (Kiveris
-    *     et al., "Connected Components in MapReduce and Beyond", SoCC'14) —
-    *     O(log n)-ish rounds on ADVERSARIAL long-chain graphs where
-    *     propagation would pay the full diameter. See [[starContraction]].
-    *
-    * Scale shape (distributed paths): every shuffle is keyed on node ids
-    * (uniform); state is one row per node (propagate) or per edge (star),
-    * persisted per round with the previous round released and lineage cut
-    * every 4th round.
+    *  1. Driver union-find: the verified-pair graph is METADATA-sized
+    *     relative to any corpus (it exists only where near-dups were
+    *     confirmed), so when an early-terminating `limit(cap + 1)` scan
+    *     proves the edge list fits, union-find on the driver replaces
+    *     O(log n) rounds of Spark jobs — the same medicine that took the
+    *     cell-kNN query from 7.6 s to 0.6 s. `cap` is the rule
+    *     [[graft.graph.Bfs.hops]] uses for its in-memory path: edge rows ·
+    *     64 ≤ `spark.sql.autoBroadcastJoinThreshold` (163,840 rows at the
+    *     default 10 MB; a threshold of -1 never collects). One session
+    *     setting decides both driver cutovers.
+    *  2. Otherwise large-star/small-star contraction (Kiveris et al.,
+    *     "Connected Components in MapReduce and Beyond", SoCC'14): a
+    *     round count logarithmic in the node count whatever the graph's
+    *     diameter, chains included, capped at [[starContraction]]'s
+    *     default 50 rounds (it throws past them).
     *
     * @param edges columns (src: bigint, dst: bigint), undirected pairs
-    * @param smallGraphEdges driver cutover cap (edges); 0 disables
-    * @param algorithm "auto" (probe propagate, fall back to star),
-    *   "propagate" (diameter-bound) or "star" (log-bound)
-    * @param autoProbeRounds propagate rounds the auto path tries before
-    *   concluding the graph is chain-shaped and switching to star
     * @return (id, component) where component = min node id reachable
     */
-  def connectedComponents(spark: SparkSession, edges: DataFrame,
-      maxIter: Int = 20, smallGraphEdges: Int = 250000,
-      algorithm: String = "auto", autoProbeRounds: Int = 4): DataFrame = {
-    if (smallGraphEdges > 0) {
+  def connectedComponents(spark: SparkSession, edges: DataFrame): DataFrame = {
+    val cap = graft.graph.Bfs.broadcastRows(spark)
+    if (cap >= 0) {
       // limit() terminates the scan early: a planet-scale edge set costs one
       // truncated pass here, never a full count
       val sample = edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .limit(smallGraphEdges + 1).collect()
-      if (sample.length <= smallGraphEdges)
+        .limit(math.min(cap + 1, Int.MaxValue).toInt).collect()
+      if (sample.length <= cap)
         return driverUnionFind(spark, sample.map(r => (r.getLong(0), r.getLong(1))))
     }
-    algorithm match {
-      case "star"      => starContraction(spark, edges, maxIter)._1
-      case "propagate" => ccPropagate(spark, edges, maxIter, warnOnNonConverge = true)._1
-      case "auto" =>
-        // probe with propagation: the overwhelmingly common near-dup graph
-        // (stars/cliques from duplicate clusters) converges in 2-3 rounds;
-        // a graph that is still moving after the probe has a long diameter
-        // and gets the log-round algorithm instead. The probe's cost on
-        // the chain-shaped loser is autoProbeRounds cheap label rounds.
-        // The edge frame is persisted ONCE up front so the fallback never
-        // re-runs a possibly expensive upstream (e.g. LSH pair
-        // generation) a second time.
-        val cached = edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val (labels, converged) =
-          ccPropagate(spark, cached, autoProbeRounds, warnOnNonConverge = false)
-        val out =
-          if (converged) labels
-          else {
-            System.err.println(s"[graft.Dedup] connectedComponents(auto): not " +
-              s"converged after $autoProbeRounds propagate rounds — switching " +
-              s"to star contraction (long-diameter graph)")
-            // the abandoned probe labels are node-sized cache/checkpoint
-            // state; the ContextCleaner releases them once unreachable
-            starContraction(spark, cached, maxIter)._1
-          }
-        // both paths have materialized their own (checkpointed/cached)
-        // state by now — the input cache can go
-        cached.unpersist(blocking = false)
-        out
-      case other => throw new IllegalArgumentException(
-        s"connectedComponents algorithm must be 'auto', 'propagate' or 'star', got '$other'")
-    }
+    starContraction(spark, edges)._1
   }
 
   /** Union-find with smaller-root-wins linking: the final root of every
     * component is its minimum node id (the min never loses a union), so
-    * labels match the distributed paths exactly.
+    * labels match the distributed path exactly.
     */
   private def driverUnionFind(spark: SparkSession,
       edges: Array[(Long, Long)]): DataFrame = {
@@ -363,64 +313,6 @@ object Dedup {
     nodes.toSeq.map(id => (id, find(id))).toDF("id", "component")
   }
 
-  /** Min-label propagation: every node adopts the minimum label in its
-    * closed neighborhood until fixpoint. Rounds ≤ graph diameter.
-    * @return (labels, converged)
-    */
-  private def ccPropagate(spark: SparkSession, edges: DataFrame,
-      maxIter: Int, warnOnNonConverge: Boolean): (DataFrame, Boolean) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val und = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .persist(lvl)
-    // State management: each round persists its output and releases the
-    // previous round's cache once materialized. Every 4th round ALSO cuts
-    // lineage with an eager localCheckpoint — the plan references the
-    // previous round twice (self join + neighbor agg), so untruncated
-    // lineage doubles per round and overflows the stack by ~iteration 10;
-    // bounded 2^4 plan growth between cuts keeps recompute-on-eviction
-    // cheap. (On a cluster with unreliable executors, swap for reliable
-    // checkpoint() + a checkpoint dir.)
-    var labels = und.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .persist(lvl)
-    var cachedPrev: Option[DataFrame] = Some(labels)
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIter) {
-      // min over self-label and every neighbor's label
-      val viaNeighbors = und
-        .join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
-        .groupBy(col("src").as("id"))
-        .agg(min(col("component")).as("nbr"))
-      val next = labels.join(viaNeighbors, Seq("id"), "left")
-        .select(col("id"),
-          least(col("component"), coalesce(col("nbr"), col("component"))).as("component"),
-          (col("nbr") < col("component")).as("moved"))
-        .persist(lvl)
-      changed = next.filter(col("moved")).count() // materializes next
-      cachedPrev.foreach(_.unpersist(blocking = false))
-      if (it % 4 == 3) {
-        labels = next.drop("moved").localCheckpoint(true)
-        next.unpersist(blocking = false)
-        cachedPrev = None
-      } else {
-        labels = next.drop("moved") // backed by next's cache
-        cachedPrev = Some(next)
-      }
-      it += 1
-    }
-    und.unpersist(blocking = false)
-    if (changed > 0 && warnOnNonConverge)
-      // wrong-but-silent labels are worse than a visible warning: a chain
-      // longer than maxIter rounds leaves one true component split
-      System.err.println(s"[graft.Dedup] connectedComponents did NOT converge " +
-        s"after $maxIter rounds ($changed labels still moving) — raise maxIter " +
-        s"or pass algorithm=\"star\" (log-round contraction) for long-chain graphs")
-    (labels, changed == 0)
-  }
-
   /** Large-star/small-star alternation (Kiveris et al., SoCC'14): converges
     * in O(log² n) rounds worst-case (empirically ~log n) regardless of graph
     * diameter — the path a 10⁶-link chain needs, where propagation would pay
@@ -435,7 +327,9 @@ object Dedup {
     * stars rooted at each component's minimum id. Convergence is detected by
     * edge-set equality (count + one anti-join on the persisted frames — the
     * set can both grow and shrink in one round, so a count alone is not
-    * enough).
+    * enough). A graph still moving after `maxIter` rounds throws
+    * `IllegalStateException`: labels short of the fixpoint can split one
+    * true component.
     *
     * @return (labels (id, component), rounds used)
     */
@@ -493,9 +387,8 @@ object Dedup {
       eCount = nextCount
       rounds += 1
     }
-    if (!converged)
-      System.err.println(s"[graft.Dedup] starContraction did NOT converge " +
-        s"after $maxIter rounds — labels may split one true component")
+    if (!converged) throw new IllegalStateException(
+      s"Dedup.starContraction did not converge within $maxIter rounds")
     // fixpoint edges are (member → component-min) stars; roots self-label.
     // Materialized (node-sized) so the returned frame doesn't re-run the
     // final join against checkpoint state the cleaner may already release.

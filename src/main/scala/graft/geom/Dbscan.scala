@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * (3×3 cell-binned equi-join — work is linear for bounded density,
   * never points × points); degrees are ONE groupBy over pair incidence;
   * components run on the core-core subgraph only (via
-  * [[graft.dedup.Dedup.connectedComponents]]'s auto path, so a
+  * [[graft.dedup.Dedup.connectedComponents]]'s size gate, so a
   * pathological all-one-cluster input degrades to star contraction
   * instead of driver collapse); border attachment is one join + min
   * aggregation over the already-materialized pairs. The corpus is

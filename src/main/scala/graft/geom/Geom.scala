@@ -84,13 +84,17 @@ object Geom {
     * >0 = counter-clockwise. Used for winding-order normalization tests.
     */
   def signedArea2(ring: Seq[Pt]): Double = {
+    def cross(a: Pt, b: Pt): Double =
+      a.lon.toDouble * b.lat.toDouble - b.lon.toDouble * a.lat.toDouble
     var s = 0.0
-    val n = ring.length
-    var i = 0
-    while (i < n) {
-      val a = ring(i); val b = ring((i + 1) % n)
-      s += a.lon.toDouble * b.lat.toDouble - b.lon.toDouble * a.lat.toDouble
-      i += 1
+    // one pass carrying the previous vertex, closing edge last: O(V) on a
+    // List, with the indexed loop's summation order
+    if (ring.nonEmpty) {
+      val it = ring.iterator
+      val first = it.next()
+      var a = first
+      while (it.hasNext) { val b = it.next(); s += cross(a, b); a = b }
+      s += cross(a, first)
     }
     s
   }

@@ -26,7 +26,9 @@ object Holes {
     * vertices) so area/orientation math sees a simple ring.
     */
   def dedupClosed(ring: Seq[Pt]): Seq[Pt] = {
-    val r = ring.zipWithIndex.filter { case (p, i) => i == 0 || p != ring(i - 1) }.map(_._1)
+    // each vertex against its predecessor in one pass: O(V) on a List
+    val r = ring.take(1).toVector ++
+      ring.iterator.zip(ring.iterator.drop(1)).collect { case (a, b) if b != a => b }
     if (r.length > 1 && r.head == r.last) r.init else r
   }
 

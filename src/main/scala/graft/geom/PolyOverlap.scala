@@ -29,10 +29,12 @@ import graft.cell.CellIndex
   * Scale shape: cover flatMap is narrow and bounded by `maxCells`; the
   * cell equi-join shuffles (cell, id) pairs only — rings attach to the
   * deduped candidates afterwards, so polygon payloads never multiply
-  * through the cover. Dense cells (many polygons stacked in one place)
-  * are the skew mode: the per-cell candidate blowup is quadratic in
-  * that cell's polygon count, visible in `observe` metrics upstream of
-  * any OOM (same policy as the LSH bucket caps in [[graft.dedup.Dedup]]).
+  * through the cover; the ring table is broadcast into both attach
+  * joins (polygon sets are boundary-metadata-sized). Dense cells (many
+  * polygons stacked in one place) are the skew mode: the per-cell
+  * candidate blowup is quadratic in that cell's polygon count, visible
+  * in `observe` metrics upstream of any OOM (same policy as the LSH
+  * bucket caps in [[graft.dedup.Dedup]]).
   */
 object PolyOverlap {
 
@@ -41,7 +43,7 @@ object PolyOverlap {
     * finer res = fewer false candidates, more cover rows per polygon.
     */
   def overlapSelfJoin(spark: SparkSession, polys: Dataset[PolygonRow], res: Int,
-      maxCells: Int = 4096, broadcastRings: Boolean = true): DataFrame = {
+      maxCells: Int = 4096): DataFrame = {
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
     // the cover flatMap (a ray-cast of every bbox cell against the rings)
@@ -63,8 +65,7 @@ object PolyOverlap {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     cand.count(): Unit // fills the pair cache (one extra bounded action)
     cells.unpersist()
-    val rings = polys.map(p => (p.relation_id, p.rings)).toDF("rid", "rings")
-    val ringsDf = if (broadcastRings) broadcast(rings) else rings
+    val ringsDf = broadcast(polys.map(p => (p.relation_id, p.rings)).toDF("rid", "rings"))
     cand
       .join(ringsDf.select(col("rid").as("id_a"), col("rings").as("rings_a")), Seq("id_a"))
       .join(ringsDf.select(col("rid").as("id_b"), col("rings").as("rings_b")), Seq("id_b"))

@@ -119,17 +119,13 @@ object Raster {
     * case, not an error.
     *
     * Scale shape: the pixel side is corpus-sized (10^12 images ×
-    * pixels); the zone raster is polygon-cover-sized and broadcast by
-    * default, so the join is map-side — ONE hash exchange total (the
-    * final (image, zone) aggregation, with map-side partials). Set
-    * `broadcastZones = false` when the zone raster itself is huge
-    * (planet-wide burn at fine pitch); the join then shuffles on the
-    * cell key, which both sides can be pre-bucketed on.
+    * pixels); the zone raster is polygon-cover-sized and always
+    * broadcast, so the join is map-side — ONE hash exchange total (the
+    * final (image, zone) aggregation, with map-side partials).
     */
   def zonalStats(zones: DataFrame, pixels: DataFrame,
-      idCol: String = "relation_id", broadcastZones: Boolean = true): DataFrame = {
-    val z = zones.select(col(idCol), col("cx"), col("cy"))
-    val zz = if (broadcastZones) broadcast(z) else z
+      idCol: String = "relation_id"): DataFrame = {
+    val zz = broadcast(zones.select(col(idCol), col("cx"), col("cy")))
     pixels.join(zz, pixels("x") === zz("cx") && pixels("y") === zz("cy"))
       .groupBy(col("image_id"), col(idCol))
       .agg(count(lit(1)).as("n_px"),
@@ -149,9 +145,8 @@ object Raster {
     * (x, y, class); zones broadcast as in [[zonalStats]].
     */
   def zonalMode(zones: DataFrame, pixels: DataFrame,
-      idCol: String = "relation_id", broadcastZones: Boolean = true): DataFrame = {
-    val z = zones.select(col(idCol), col("cx"), col("cy"))
-    val zz = if (broadcastZones) broadcast(z) else z
+      idCol: String = "relation_id"): DataFrame = {
+    val zz = broadcast(zones.select(col(idCol), col("cx"), col("cy")))
     pixels.join(zz, pixels("x") === zz("cx") && pixels("y") === zz("cy"))
       .groupBy(col(idCol), col("class"))
       .agg(count(lit(1)).as("cnt"))
@@ -189,21 +184,19 @@ object Raster {
     * denominator or divide at the edge. No float enters the operator.
     *
     * Scale shape: ONE cell-keyed equi-join (the overlap), then
-    * source-keyed joins for sizes and values — at planet scale the cell
-    * join shuffles on (cx, cy), which both burns can be pre-bucketed on;
-    * `broadcastDst = true` makes it map-side when the target zoning is
-    * small (the admin-rollup case).
+    * source-keyed joins for sizes and values. The target zoning is
+    * always broadcast, so the overlap join is map-side — the
+    * admin-rollup case. (It used to be broadcast only on request, with a
+    * shuffle join by default; every caller requested the broadcast.)
     */
   def arealInterp(srcCells: DataFrame, dstCells: DataFrame, values: DataFrame,
-      srcId: String = "src_id", dstId: String = "dst_id",
-      broadcastDst: Boolean = false): DataFrame = {
+      srcId: String = "src_id", dstId: String = "dst_id"): DataFrame = {
     // src feeds both the size aggregation and the overlap join —
     // persisted so the upstream burn (a bbox-lattice explode + ray-cast
     // filter when it comes from rasterize) runs once, not twice
     val src = srcCells.select(col(srcId), col("cx"), col("cy"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dst0 = dstCells.select(col(dstId), col("cx"), col("cy"))
-    val dst = if (broadcastDst) broadcast(dst0) else dst0
+    val dst = broadcast(dstCells.select(col(dstId), col("cx"), col("cy")))
     val srcSz = src.groupBy(col(srcId)).agg(count(lit(1)).as("src_cells"))
     src.join(dst, Seq("cx", "cy"))
       .groupBy(col(srcId), col(dstId))
@@ -331,8 +324,7 @@ object Raster {
     * rounds, per-round eager localCheckpoint kills plan growth.
     */
   def voronoiAssign(cells: DataFrame, seeds: DataFrame,
-      idCol: String = "relation_id", maxRounds: Int = 512,
-      blockRounds: Int = 8): DataFrame = {
+      idCol: String = "relation_id", maxRounds: Int = 512): DataFrame = {
     val occ = graft.graph.Bfs.joinSide(
       cells.select(col(idCol), col("cx").cast("long").as("cx"),
         col("cy").cast("long").as("cy")))
@@ -348,14 +340,14 @@ object Raster {
     // lattice): a ×5 scatter whose (0,0) offset is the self-entry that
     // carries every existing claim while the four real offsets expand
     // only the still-fresh frontier — the state is referenced once per
-    // round, so blockRounds rounds chain lazily into one linear plan
+    // round, so 8 rounds chain lazily into one linear plan
     // with a single checkpoint + count() action per block. Claiming
     // stays exact: a fresh cell's arrivals all come from the previous
     // round's fresh set (its geodesic-distance-(r−1) predecessors), so
     // per-round min(seed) over arrivals reproduces the global
     // argmin-by-(dist, seed) — the self-entry wins outright for already-
     // claimed cells (labels never change once set).
-    val out = graft.graph.Bfs.runBlocked(init, maxRounds, blockRounds,
+    val out = graft.graph.Bfs.runBlocked(init, maxRounds, 8,
         "Raster.voronoiAssign", graft.graph.Bfs.countProbe) { (cur, _) =>
       cur.select(col(idCol), col("dist"), col("seed"), col("fresh"),
           explode(array(
@@ -500,8 +492,7 @@ object Raster {
     * per-round eager localCheckpoint kills plan growth.
     */
   def costDistance(cells: DataFrame, seeds: DataFrame,
-      idCol: String = "relation_id", maxRounds: Int = 512,
-      blockRounds: Int = 8): DataFrame = {
+      idCol: String = "relation_id", maxRounds: Int = 512): DataFrame = {
     val guardedV = when(col("v") > 0, col("v"))
       .otherwise(raise_error(concat(
         lit("Raster.costDistance: non-positive cost at cell ("),
@@ -532,7 +523,7 @@ object Raster {
       val n = r.getLong(0)
       (n, Seq(n, if (r.isNullAt(1)) 0L else r.getLong(1)))
     }
-    val out = graft.graph.Bfs.runBlocked(init, maxRounds, blockRounds,
+    val out = graft.graph.Bfs.runBlocked(init, maxRounds, 8,
         "Raster.costDistance", probe) { (cur, _) =>
       cur.select(col(idCol), col("dist"), col("fresh"),
           explode(array(

@@ -134,7 +134,7 @@ object Bfs {
   /** Rows that fit the session's broadcast threshold at the ~64
     * bytes/row of [[joinSide]]; -1 when broadcasting is off.
     */
-  private def broadcastRows(spark: SparkSession): Long = {
+  private[graft] def broadcastRows(spark: SparkSession): Long = {
     val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
     if (threshold > 0) threshold / 64 else -1L
   }
@@ -194,7 +194,7 @@ object Bfs {
     * needing more throws.
     */
   def hops(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
-      maxRounds: Int = 256, blockRounds: Int = 8): DataFrame = {
+      maxRounds: Int = 256): DataFrame = {
     val und = edges.select(col("rel_a").cast("long").as("src"),
       col("rel_b").cast("long").as("dst")).localCheckpoint(false)
     val seedIds = seeds.select(col("id").cast("long").as("src"))
@@ -214,7 +214,7 @@ object Bfs {
           hopsSchema)
       }
     }
-    blockedHops(und, seedIds.distinct(), maxRounds, blockRounds)
+    blockedHops(und, seedIds.distinct(), maxRounds)
   }
 
   /** The blocked loop's output schema: `hops` comes out of a struct
@@ -255,16 +255,16 @@ object Bfs {
   }
 
   /** The blocked Spark loop behind [[hops]]: one self-edge-augmented join
-    * + aggregation per round, `blockRounds` rounds per checkpoint.
+    * + aggregation per round, 8 rounds per checkpoint.
     */
-  private def blockedHops(und: DataFrame, seedIds: DataFrame, maxRounds: Int,
-      blockRounds: Int): DataFrame = {
+  private def blockedHops(und: DataFrame, seedIds: DataFrame,
+      maxRounds: Int): DataFrame = {
     val dir = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
     val dirPlus = joinSide(withSelfEdges(dir, Some(seedIds)))
     val init = seedIds.select(col("src").as("id"))
       .withColumn("hops", lit(0L)).withColumn("fresh", lit(1))
-    val out = runBlocked(init, maxRounds, blockRounds, "Bfs.hops",
+    val out = runBlocked(init, maxRounds, 8, "Bfs.hops",
         countProbe) { (cur, _) =>
       cur.withColumnRenamed("id", "src")
         .join(dirPlus, Seq("src"))
@@ -288,7 +288,7 @@ object Bfs {
     * pair, including (v, v, 0).
     */
   def allPairsHops(spark: SparkSession, edges: DataFrame,
-      maxRounds: Int = 64, blockRounds: Int = 4): DataFrame = {
+      maxRounds: Int = 64): DataFrame = {
     val und = edges.select(col("rel_a").cast("long").as("src"),
       col("rel_b").cast("long").as("dst"))
     val dir = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
@@ -301,7 +301,7 @@ object Bfs {
     val init = dirPlus.filter(col("self") === 1)
       .select(col("src").as("origin"), col("src").as("id"))
       .withColumn("hops", lit(0L)).withColumn("fresh", lit(1))
-    val out = runBlocked(init, maxRounds, blockRounds, "Bfs.allPairsHops",
+    val out = runBlocked(init, maxRounds, 4, "Bfs.allPairsHops",
         countProbe) { (cur, _) =>
       cur.withColumnRenamed("id", "src")
         .join(dirPlus, Seq("src"))
@@ -332,7 +332,7 @@ object Bfs {
     * pair, with σ(v, v) = 1.
     */
   def allPairsSigma(spark: SparkSession, edges: DataFrame,
-      maxRounds: Int = 64, blockRounds: Int = 4): DataFrame = {
+      maxRounds: Int = 64): DataFrame = {
     val und = edges.select(col("rel_a").cast("long").as("src"),
       col("rel_b").cast("long").as("dst"))
     val dir = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
@@ -344,7 +344,7 @@ object Bfs {
       .select(col("src").as("origin"), col("src").as("id"))
       .withColumn("hops", lit(0L)).withColumn("sigma", lit(1L))
       .withColumn("fresh", lit(1))
-    val out = runBlocked(init, maxRounds, blockRounds, "Bfs.allPairsSigma",
+    val out = runBlocked(init, maxRounds, 4, "Bfs.allPairsSigma",
         countProbe) { (cur, _) =>
       cur.withColumnRenamed("id", "src")
         .join(dirPlus, Seq("src"))

@@ -73,7 +73,7 @@ object Centrality {
     * (where you'd run it per 2-edge-connected candidate region).
     */
   def bridges(spark: SparkSession, edges: DataFrame,
-      maxRounds: Int = 256, blockRounds: Int = 8): DataFrame = {
+      maxRounds: Int = 256): DataFrame = {
     val lvl = StorageLevel.MEMORY_AND_DISK
     val und = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
@@ -86,7 +86,7 @@ object Centrality {
     // blocked round fusion (Bfs.runBlocked): self-edges carry the
     // visited set, real edges expand only the fresh frontier with the
     // origin's own edge excluded by the expansion predicate. The
-    // per-round plan references the state once, so blockRounds rounds
+    // per-round plan references the state once, so 8 rounds
     // chain lazily with one checkpoint + count() per block. The old
     // per-origin early retirement (stop once b is reached) traded
     // per-round driver jobs for less state — with fused rounds the
@@ -96,7 +96,7 @@ object Centrality {
     val dirPlus = Bfs.joinSide(Bfs.withSelfEdges(dir, None))
     val init = und.select(col("a"), col("b"), col("a").as("id"))
       .withColumn("fresh", lit(1))
-    val st = Bfs.runBlocked(init, maxRounds, blockRounds,
+    val st = Bfs.runBlocked(init, maxRounds, 8,
         "Centrality.bridges", Bfs.countProbe) { (cur, _) =>
       cur.withColumnRenamed("id", "s")
         .join(dirPlus.withColumnRenamed("src", "s"), Seq("s"))
@@ -140,7 +140,7 @@ object Centrality {
     * every non-isolated vertex; `reached` is 0 for non-candidates.
     */
   def articulation(spark: SparkSession, edges: DataFrame,
-      maxRounds: Int = 256, blockRounds: Int = 8): DataFrame = {
+      maxRounds: Int = 256): DataFrame = {
     val lvl = StorageLevel.MEMORY_AND_DISK
     val und = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
@@ -165,7 +165,7 @@ object Centrality {
     val dirPlus = Bfs.joinSide(Bfs.withSelfEdges(
       dir.select(col("s").as("src"), col("d").as("dst")), None))
     val init = removalSeeds.unionByName(coverSeeds).withColumn("fresh", lit(1))
-    val dist = Bfs.runBlocked(init, maxRounds, blockRounds,
+    val dist = Bfs.runBlocked(init, maxRounds, 8,
         "Centrality.articulation", Bfs.countProbe) { (cur, _) =>
       cur.withColumnRenamed("id", "s")
         .join(dirPlus.withColumnRenamed("src", "s"), Seq("s"))

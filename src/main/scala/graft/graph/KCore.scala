@@ -16,14 +16,14 @@ import org.apache.spark.sql.functions._
   * undirected view) and a filter keeping edges whose both endpoints
   * retain degree ≥ k — the edge frame is referenced exactly once per
   * round (the old aggregate → anti-join × 2 shape read it three times),
-  * so rounds chain lazily through [[Bfs.runBlocked]]: `blockRounds`
+  * so rounds chain lazily through [[Bfs.runBlocked]]: 8
   * peels per localCheckpoint + count() action instead of three driver
   * jobs per peel. The windows have no ORDER BY (unbounded frame —
   * node-partitioned count, no sort) and partitions are node-degree
   * sized, the same distribution a degree groupBy has. Edges only ever
   * leave, so the edge count at a block boundary is a complete fixpoint
   * signature. A path at k=2 still peels only its two endpoints per
-  * round — O(n) rounds worst case — but now at O(n / blockRounds)
+  * round — O(n) rounds worst case — but now at O(n / 8)
   * driver round-trips; non-convergence inside `maxRounds` peels throws
   * loudly (a truncated peel would silently overstate the core).
   */
@@ -35,7 +35,7 @@ object KCore {
     * simple-graph reading); parallel/reverse duplicates collapse.
     */
   def kCore(spark: SparkSession, edges: DataFrame, k: Int,
-      maxRounds: Int = 1000, blockRounds: Int = 8): DataFrame = {
+      maxRounds: Int = 1000): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val simple = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
@@ -44,7 +44,7 @@ object KCore {
       .distinct()
     val wS = Window.partitionBy(col("src"))
     val wD = Window.partitionBy(col("dst"))
-    val core = Bfs.runBlocked(und, maxRounds, blockRounds,
+    val core = Bfs.runBlocked(und, maxRounds, 8,
         s"kCore(k=$k)", Bfs.countProbe) { (cur, _) =>
       cur.withColumn("ds", count(lit(1)).over(wS))
         .withColumn("dd", count(lit(1)).over(wD))

@@ -16,8 +16,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale shape: per round one label equi-join + one component-keyed
   * min aggregation; the selected-edge set is component-count-sized and
-  * merges through [[graft.dedup.Dedup.connectedComponents]] (auto
-  * algorithm, metadata-sized input by construction). Rounds are
+  * merges through [[graft.dedup.Dedup.connectedComponents]] (driver
+  * union-find while it fits a broadcast, star contraction above that). Rounds are
   * O(log V) — Borůvka at least halves the component count every round.
   * Eager localCheckpoint per round ([[Bfs.hops]] discipline).
   */

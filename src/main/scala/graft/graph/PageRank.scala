@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * the canonical BSP round; nothing is driver-sized except the loop
   * counter. Fixed `iters` keeps the plan a linear DAG; a convergence-
   * tested variant would checkpoint each round (same policy as
-  * [[graft.dedup.Dedup.connectedComponents]]'s lineage cuts).
+  * [[graft.dedup.Dedup.starContraction]]'s lineage cuts).
   *
   * Dangling nodes (no out-edges) leak their mass — the classic simplest
   * variant, stated rather than hidden; redistribute-to-all needs one
@@ -140,7 +140,7 @@ object Hits {
     val nodes = e.select(col("src").as("doc_id"))
       .union(e.select(col("dst").as("doc_id"))).distinct()
     // materialize (node-sized, the house policy for iterative results —
-    // see connectedComponents) so the cached inputs can be released
+    // see Dedup.starContraction) so the cached inputs can be released
     val out = nodes
       .join(hub, Seq("doc_id"), "left")
       .join(auth, Seq("doc_id"), "left")

@@ -15,7 +15,7 @@ import scala.util.chaining._
   * self-edge-augmented directed view (weight-0 self-edges carry every
   * settled label; real edges relax only nodes whose distance improved
   * in the previous round) and one min(struct(dist, fresh)) combine —
-  * the state frame is referenced once per round, so `blockRounds`
+  * the state frame is referenced once per round, so 8
   * rounds chain lazily into a single linear plan with one
   * localCheckpoint + one aggregation action per block instead of three
   * driver jobs per round. The improvement-only frontier semantics are
@@ -42,7 +42,7 @@ object Sssp {
     * unreached nodes don't appear.
     */
   def distances(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
-      maxRounds: Int = 512, blockRounds: Int = 8): DataFrame = {
+      maxRounds: Int = 512): DataFrame = {
     val guardedW = when(col("w") > 0, col("w"))
       .otherwise(raise_error(concat(
         lit("Sssp: non-positive weight on edge "), col("src"),
@@ -69,7 +69,7 @@ object Sssp {
       val n = r.getLong(0)
       (n, Seq(n, if (r.isNullAt(1)) 0L else r.getLong(1)))
     }
-    val out = Bfs.runBlocked(init, maxRounds, blockRounds, "Sssp.distances",
+    val out = Bfs.runBlocked(init, maxRounds, 8, "Sssp.distances",
         probe) { (cur, _) =>
       cur.withColumnRenamed("id", "src")
         .join(dirPlus, Seq("src"))

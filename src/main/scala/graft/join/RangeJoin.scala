@@ -20,10 +20,9 @@ import org.apache.spark.sql.functions._
   * matches. Each matching pair is emitted once: the probe has one bucket,
   * and the interval has one replica in that bucket.
   *
-  * At scale: with intervals broadcast the probe side never shuffles — the
-  * whole join is map-side. If the interval set outgrows the broadcast
-  * threshold the same plan degrades gracefully to a shuffled hash/sort-merge
-  * join on the bucket key, still never a nested loop. Pick `bucketWidth`
+  * At scale: the replicated interval side is always broadcast (interval
+  * tables are metadata-sized in every pipeline this engine targets), so the
+  * probe side never shuffles — the whole join is map-side. Pick `bucketWidth`
   * near the median interval length: too small multiplies interval replicas,
   * too large multiplies residual-filter false candidates.
   */
@@ -33,9 +32,6 @@ object RangeJoin {
     * @param intervals small side with integral `[startCol, endCol)` bounds
     *   (end exclusive; empty intervals produce no matches)
     * @param bucketWidth bucket size in `tsCol` units, > 0
-    * @param broadcastIntervals hint-broadcast the replicated interval side
-    *   (the default — interval tables are metadata-sized in every pipeline
-    *   this engine targets); set false to let AQE choose for a big one
     * @return probes ⋈ intervals rows with all columns of both inputs
     */
   def bucketed(
@@ -44,15 +40,13 @@ object RangeJoin {
       intervals: DataFrame,
       startCol: String,
       endCol: String,
-      bucketWidth: Long,
-      broadcastIntervals: Boolean = true): DataFrame = {
+      bucketWidth: Long): DataFrame = {
     require(bucketWidth > 0, s"bucketWidth must be positive, got $bucketWidth")
-    val expanded = intervals
+    val small = broadcast(intervals
       .filter(col(endCol) > col(startCol))
       .withColumn("__bucket", explode(sequence(
         expr(s"$startCol div ${bucketWidth}L"),
-        expr(s"($endCol - 1) div ${bucketWidth}L"))))
-    val small = if (broadcastIntervals) broadcast(expanded) else expanded
+        expr(s"($endCol - 1) div ${bucketWidth}L")))))
     probes
       .withColumn("__bucket", expr(s"$tsCol div ${bucketWidth}L"))
       .join(small, Seq("__bucket"))

@@ -616,8 +616,8 @@ object BoundaryExtract {
     * [[contiguity]] supplies the pair graph, the same-attribute filter
     * drops cross-attribute edges BEFORE closure (so components can never
     * bridge attributes), and `Dedup.connectedComponents` labels regions
-    * (auto algorithm: driver union-find under the small-graph cutover,
-    * distributed propagate/star above it). Region id = min relation_id in
+    * (driver union-find under the broadcast-sized cutover, star
+    * contraction above it). Region id = min relation_id in
     * the component; polygons with no same-attribute neighbor stay their
     * own region via the left-join fallback to self.
     *

@@ -128,11 +128,7 @@ object BfsSpec {
   /** A session whose broadcast threshold is off: `Bfs.hops` runs the
     * blocked Spark loop there whatever the graph's size.
     */
-  lazy val blocked: SparkSession = {
-    val s = SparkTestSession.spark.newSession()
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s
-  }
+  lazy val blocked: SparkSession = SparkTestSession.broadcastOff
 
   private val scopeKey = "graft.test.bfs.scope"
   private val scopes = new AtomicInteger()

@@ -154,8 +154,10 @@ class DedupSpec extends AnyFunSuite {
       groups.values.flatMap(ns => { val m = ns.min; ns.map(_ -> m) }).toMap
     }
     // deterministic pseudo-random graphs of varying density — checked on
-    // ALL THREE execution paths (driver union-find cutover, distributed
-    // min-label propagation, distributed star contraction)
+    // BOTH execution paths: the driver union-find the default session
+    // takes for these broadcast-sized graphs, and the star contraction a
+    // session with the broadcast threshold at -1 forces
+    val distributed = SparkTestSession.broadcastOff
     for (seed <- 0 until 4) {
       val n = 30
       val edges = (0 until 40).map { i =>
@@ -166,21 +168,11 @@ class DedupSpec extends AnyFunSuite {
       val gotDriver = Dedup.connectedComponents(spark, edges.toDF("src", "dst"))
         .as[(Long, Long)].collect().toMap
       assert(gotDriver == expected, s"driver cutover, seed=$seed")
-      val gotProp = Dedup.connectedComponents(spark, edges.toDF("src", "dst"),
-        smallGraphEdges = 0, algorithm = "propagate")
-        .as[(Long, Long)].collect().toMap
-      assert(gotProp == expected, s"propagate, seed=$seed")
-      val gotStar = Dedup.connectedComponents(spark, edges.toDF("src", "dst"),
-        smallGraphEdges = 0, algorithm = "star")
+      val gotStar = Dedup.connectedComponents(distributed, edges.toDF("src", "dst"))
         .as[(Long, Long)].collect().toMap
       assert(gotStar == expected, s"star, seed=$seed")
-      // auto on a dense-ish random graph: the propagate probe converges
-      val gotAuto = Dedup.connectedComponents(spark, edges.toDF("src", "dst"),
-        smallGraphEdges = 0, algorithm = "auto")
-        .as[(Long, Long)].collect().toMap
-      assert(gotAuto == expected, s"auto, seed=$seed")
     }
-    // a 12-node chain needs label propagation across the full diameter
+    // a 12-node chain: the labels must close over the full diameter
     val chain = (0L until 11L).map(i => (i, i + 1))
     val gotChain = Dedup.connectedComponents(spark, chain.toDF("src", "dst"))
       .as[(Long, Long)].collect().toMap
@@ -201,18 +193,26 @@ class DedupSpec extends AnyFunSuite {
     assert(got.forall(_._2 == 0L), s"non-min labels: ${got.filter(_._2 != 0L).take(5).toSeq}")
   }
 
-  test("auto algorithm converges on a long chain without the caller naming star") {
-    // VERDICT r3 #6: the caller should not have to know their graph is
-    // chain-shaped. auto probes propagation (4 rounds — not enough for a
-    // 2k diameter) and must switch to star contraction on its own.
+  test("connectedComponents' distributed path labels a 2k-node chain with its minimum") {
+    // the caller never has to know their graph is chain-shaped: a
+    // session with broadcasting off sends it to star contraction, whose
+    // round count does not grow with the 2k diameter
     val n = 2000
     val path = spark.range(0, n - 1)
       .select(col("id").as("src"), (col("id") + 1).as("dst"))
-    val got = Dedup.connectedComponents(spark, path,
-      smallGraphEdges = 0 /* force the distributed path */)
+    val got = Dedup.connectedComponents(SparkTestSession.broadcastOff, path)
       .as[(Long, Long)].collect()
     assert(got.length == n)
     assert(got.forall(_._2 == 0L), s"non-min labels: ${got.filter(_._2 != 0L).take(5).toSeq}")
+  }
+
+  test("star contraction throws when it does not converge within maxIter rounds") {
+    // two rounds cannot contract a 1,000-node path: partial labels would
+    // split the one true component, so the loop must fail loudly
+    val path = spark.range(0, 999)
+      .select(col("id").as("src"), (col("id") + 1).as("dst"))
+    val e = intercept[IllegalStateException](Dedup.starContraction(spark, path, maxIter = 2))
+    assert(e.getMessage.contains("did not converge within 2 rounds"), e.getMessage)
   }
 
   test("simhash: tiny edits on long docs stay within hamming 3; random texts far") {

@@ -7,7 +7,7 @@ import graft.osm.AdminLevel
 import graft.naming.Naming
 import graft.ring.RingAssembler
 import graft.ring.RingAssembler.SegNode
-import graft.geom.{Geom, Pt, PolygonRow}
+import graft.geom.{Geom, Holes, Pt, PolygonRow}
 import graft.emit.{Emitters, FloatFmt}
 import graft.cell.CellIndex
 
@@ -261,6 +261,21 @@ class GeomSpec extends AnyFunSuite with TimeLimits {
       // a rect clear of the ring reaches the edge-crossing scan
       assert(!Geom.ringsIntersectRect(Seq(list), 20, 20, 30, 30))
       assert(Geom.ringsIntersectRect(Seq(list), 9.5, -1, 11, 1))
+    }
+  }
+  test("signed area and closed-ring dedup walk a 100k-vertex List ring once, with the Vector ring's results") {
+    // every 7th vertex repeated (a stitch junction) plus the closing vertex
+    val n = 100000
+    val vec = Vector.tabulate(n) { i =>
+      val t = 2 * math.Pi * i / n
+      Pt((10 * math.sin(t)).toFloat, (10 * math.cos(t)).toFloat)
+    }.zipWithIndex.flatMap { case (p, i) => if (i % 7 == 0) Seq(p, p) else Seq(p) } :+ Pt(0f, 10f)
+    val list = vec.toList
+    failAfter(Span(5, Seconds)) {
+      assert(Geom.signedArea2(list) == Geom.signedArea2(vec))
+      assert(Holes.dedupClosed(list) == Holes.dedupClosed(vec))
+      assert(Holes.dedupClosed(list).length == n)
+      assert(Holes.isCcw(list) && Holes.isCcw(vec)) // x = lon = cos, y = lat = sin
     }
   }
 }

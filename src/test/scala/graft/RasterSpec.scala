@@ -150,7 +150,7 @@ class RasterSpec extends AnyFunSuite {
     val dst = Seq((1L, 1L, 0L), (1L, 1L, 1L), (2L, 9L, 9L))
       .toDF("dst_id", "cx", "cy")
     val values = Seq((100L, 10L), (200L, 7L)).toDF("src_id", "v")
-    val got = Raster.arealInterp(src, dst, values, broadcastDst = true)
+    val got = Raster.arealInterp(src, dst, values)
       .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
     assert(got === Set(
       (1L, 100L, 1L, 2L, 10L, 10L), // X gets half of A: 10·1/2

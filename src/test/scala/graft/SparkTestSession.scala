@@ -14,4 +14,14 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** A session with the broadcast threshold at -1: the size gates of
+    * `Bfs.hops` and `Dedup.connectedComponents` then take their
+    * distributed paths whatever the graph's size.
+    */
+  lazy val broadcastOff: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s
+  }
 }
