@@ -487,6 +487,27 @@ object SparkEntry {
       idCol = "o_orderkey")
   }
 
+  /** Longest-path closure of a DAG's (u, v) edges by max-plus relation
+    * doubling (q271): rows (u, v, len) with `len` the longest u→v path.
+    * One [[graft.graph.Fixpoint]] round per doubling; a round marks the
+    * pairs it added or lengthened, so a depth-D DAG stops after
+    * ⌈log₂ D⌉ + 1 rounds.
+    */
+  private[graft] def dagLongestPaths(edges: DataFrame, maxRounds: Int): DataFrame =
+    graft.graph.Fixpoint.run(
+        edges.select(col("u"), col("v"), lit(1L).as("len"), lit(1).as("fresh")),
+        maxRounds, 1, "q271 path doubling") { (r, _) =>
+      val sq = r.select(col("u"), col("v").as("m"), col("len").as("l1"))
+        .join(r.select(col("u").as("m"), col("v"), col("len").as("l2")), Seq("m"))
+        .select(col("u"), col("v"), (col("l1") + col("l2")).as("len"), lit(0).as("old"))
+      // max(struct(len, old)) keeps the existing row on a tie
+      r.select(col("u"), col("v"), col("len"), lit(1).as("old")).unionByName(sq)
+        .groupBy(col("u"), col("v"))
+        .agg(max(struct(col("len"), col("old"))).as("m"))
+        .select(col("u"), col("v"), col("m.len").as("len"),
+          (lit(1) - col("m.old")).as("fresh"))
+    }
+
   // ——————————————————————— queries ———————————————————————
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -3708,9 +3729,7 @@ object SparkEntry {
     // converges in ⌈log₂ D⌉ + 1 rounds (7 here vs the 59 the per-level
     // loop paid; driver round-trips, not data, dominate this query).
     // The closure is pair-sized (≤ reachable pairs — the bounded-DAG
-    // contract; at 100 TB you layer a job graph, not the raw web). The
-    // (count, sum) pair at each boundary is a complete convergence
-    // signature: path lengths only lengthen and pairs only appear.
+    // contract; at 100 TB you layer a job graph, not the raw web).
     "q271_dag_layers" -> ((s, _) => {
       val edges = s.range(0, 60).select(col("id").as("u"))
         .select(col("u"), explode(array(
@@ -3718,28 +3737,7 @@ object SparkEntry {
           when(col("u") % 3 === 0, col("u") + 7),
           when(col("u") % 5 === 2, col("u") + 13))).as("v"))
         .filter(col("v").isNotNull && col("v") < 60)
-      var r = edges.select(col("u"), col("v"), lit(1L).as("len"))
-        .localCheckpoint(false)
-      def sig(df: DataFrame): (Long, Long) = {
-        val row = df.agg(count(lit(1)), sum(col("len"))).collect()(0)
-        (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
-      }
-      var prev = sig(r)
-      var round = 0
-      var done = false
-      while (!done) {
-        val sq = r.select(col("u"), col("v").as("m"), col("len").as("l1"))
-          .join(r.select(col("u").as("m"), col("v"), col("len").as("l2")),
-            Seq("m"))
-          .select(col("u"), col("v"), (col("l1") + col("l2")).as("len"))
-        val next = r.unionByName(sq).groupBy(col("u"), col("v"))
-          .agg(max(col("len")).as("len"))
-          .localCheckpoint(false)
-        val cur = sig(next)
-        if (cur == prev) done = true
-        else if (round > 8) throw new IllegalStateException("q271 diverged")
-        else { r = next; prev = cur; round += 1 }
-      }
+      val r = dagLongestPaths(edges, 9)
       s.range(0, 60).select(col("id"))
         .join(r.groupBy(col("v").as("id")).agg(max(col("len")).as("layer")),
           Seq("id"), "left")

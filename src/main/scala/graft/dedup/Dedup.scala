@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.graph.Fixpoint
 import graft.img.ImageTable.splitmix64
 
 /** Document deduplication for training-data pipelines (driver prompt):
@@ -324,14 +325,14 @@ object Dedup {
     *  - small-star: each node attaches its smaller-or-equal neighbors (and
     *    itself) to that set's minimum.
     * Both steps preserve component connectivity; the fixpoint is a forest of
-    * stars rooted at each component's minimum id. Convergence is detected by
-    * edge-set equality (count + one anti-join on the persisted frames — the
-    * set can both grow and shrink in one round, so a count alone is not
-    * enough). A graph still moving after `maxIter` rounds throws
+    * stars rooted at each component's minimum id. Rounds run through
+    * [[graft.graph.Fixpoint]], which stops on edge-set equality. A graph
+    * still moving after `maxIter` changing rounds throws
     * `IllegalStateException`: labels short of the fixpoint can split one
     * true component.
     *
-    * @return (labels (id, component), rounds used)
+    * @return (labels (id, component), rounds run — the last one changed
+    *         nothing)
     */
   def starContraction(spark: SparkSession, edges: DataFrame,
       maxIter: Int = 50): (DataFrame, Int) = {
@@ -348,24 +349,28 @@ object Dedup {
     val ids = canon.select(col("hi").as("id"))
       .union(canon.select(col("lo").as("id")))
       .distinct()
-    // Lineage is cut with an eager localCheckpoint EVERY round: one round's
-    // plan references the previous edge set ~8 times (both → e ×2, mins →
-    // both, ls → both+mins, next → ls ×3), so an uncut plan tree grows ~8^k
-    // and even its debug-string rendering OOMs by round 5. With per-round
-    // cuts the plan is constant-size and the checkpointed state is one row
-    // per edge. (On a cluster with unreliable executors, swap for reliable
-    // checkpoint() + a checkpoint dir.)
-    var e: DataFrame = canon.filter(col("hi") =!= col("lo"))
-    var eCount = e.count()
+    // One round per Fixpoint block: a round's plan references the
+    // previous edge set ~8 times (both → e ×2, mins → both, ls → both+mins,
+    // next → ls ×3, fresh → e), so an uncut plan tree grows ~8^k and even
+    // its debug-string rendering OOMs by round 5. With per-round cuts the
+    // plan is constant-size and the checkpointed state is one row per
+    // edge. The edge set can both grow and shrink in one round, so the
+    // runner stops on "no new edge and the same edge count" — set
+    // equality. (On a cluster with unreliable executors, swap for
+    // reliable checkpoint() + a checkpoint dir.)
     var rounds = 0
-    var converged = eCount == 0
-    while (!converged && rounds < maxIter) {
-      val both = e.select(col("hi").as("u"), col("lo").as("v"))
-        .union(e.select(col("lo").as("u"), col("hi").as("v")))
+    var ls: DataFrame = null
+    val init = canon.filter(col("hi") =!= col("lo")).withColumn("fresh", lit(1))
+    val e = try Fixpoint.run(init, maxIter, 1, "Dedup.starContraction",
+        shrinks = true) { (cur, round) =>
+      rounds = round
+      if (ls != null) ls.unpersist(blocking = false)
+      val both = cur.select(col("hi").as("u"), col("lo").as("v"))
+        .union(cur.select(col("lo").as("u"), col("hi").as("v")))
       // m = min(Γ(u) ∪ {u}); attach every neighbor v > u to m
       val mins = both.groupBy("u").agg(min(col("v")).as("mv"))
         .select(col("u"), least(col("u"), col("mv")).as("m"))
-      val ls = both.join(mins, Seq("u"))
+      ls = both.join(mins, Seq("u"))
         .filter(col("v") > col("u"))
         .select(col("v").as("hi"), col("m").as("lo"))
         .filter(col("hi") =!= col("lo"))
@@ -373,22 +378,14 @@ object Dedup {
         .persist(lvl) // read three times below (mins2 + join + union)
       // small-star over the directed (hi → smaller lo) edges
       val mins2 = ls.groupBy("hi").agg(min(col("lo")).as("m"))
-      val next = ls.join(mins2, Seq("hi"))
+      ls.join(mins2, Seq("hi"))
         .filter(col("lo") =!= col("m"))
         .select(col("lo").as("hi"), col("m").as("lo"))
         .union(mins2.select(col("hi"), col("m").as("lo")))
         .distinct()
-        .localCheckpoint(true) // eager: materializes + truncates lineage
-      val nextCount = next.count()
-      converged = nextCount == eCount &&
-        next.join(e, Seq("hi", "lo"), "left_anti").limit(1).count() == 0
-      ls.unpersist(blocking = false)
-      e = next // previous checkpoint RDDs are released by the ContextCleaner
-      eCount = nextCount
-      rounds += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"Dedup.starContraction did not converge within $maxIter rounds")
+        .join(cur.select(col("hi"), col("lo"), lit(0).as("fresh")), Seq("hi", "lo"), "left")
+        .select(col("hi"), col("lo"), coalesce(col("fresh"), lit(1)).as("fresh"))
+    } finally if (ls != null) ls.unpersist(blocking = false)
     // fixpoint edges are (member → component-min) stars; roots self-label.
     // Materialized (node-sized) so the returned frame doesn't re-run the
     // final join against checkpoint state the cleaner may already release.

@@ -341,14 +341,14 @@ object Raster {
     // carries every existing claim while the four real offsets expand
     // only the still-fresh frontier — the state is referenced once per
     // round, so 8 rounds chain lazily into one linear plan
-    // with a single checkpoint + count() action per block. Claiming
+    // with a single checkpoint + probe job per block. Claiming
     // stays exact: a fresh cell's arrivals all come from the previous
     // round's fresh set (its geodesic-distance-(r−1) predecessors), so
     // per-round min(seed) over arrivals reproduces the global
     // argmin-by-(dist, seed) — the self-entry wins outright for already-
     // claimed cells (labels never change once set).
-    val out = graft.graph.Bfs.runBlocked(init, maxRounds, 8,
-        "Raster.voronoiAssign", graft.graph.Bfs.countProbe) { (cur, _) =>
+    val out = graft.graph.Fixpoint.run(init, maxRounds, 8,
+        "Raster.voronoiAssign") { (cur, _) =>
       cur.select(col(idCol), col("dist"), col("seed"), col("fresh"),
           explode(array(
             struct(col("cx"), col("cy"), lit(1).as("self")) +:
@@ -515,16 +515,11 @@ object Raster {
     // raster AFTER the scatter (inner join — off-lattice targets drop).
     // min(struct(dist, fresh)) prefers the existing label on ties, so
     // only STRICT improvements re-expand — the unfused loop's left-join
-    // filter, fused into the combine. Distances are monotone and labels
-    // only grow, so (count, sum) at block boundaries is a complete
-    // convergence signature (see Sssp.scala).
-    def probe(df: DataFrame): (Long, Seq[Any]) = {
-      val r = df.agg(count(lit(1)), sum(col("dist"))).collect()(0)
-      val n = r.getLong(0)
-      (n, Seq(n, if (r.isNullAt(1)) 0L else r.getLong(1)))
-    }
-    val out = graft.graph.Bfs.runBlocked(init, maxRounds, 8,
-        "Raster.costDistance", probe) { (cur, _) =>
+    // filter, fused into the combine — and the runner's stop test.
+    // Relaxations saturate at Long.MaxValue and a saturated result fails
+    // the job, as in Sssp.
+    val out = graft.graph.Fixpoint.run(init, maxRounds, 8,
+        "Raster.costDistance") { (cur, _) =>
       cur.select(col(idCol), col("dist"), col("fresh"),
           explode(array(
             struct(col("cx"), col("cy"), lit(1).as("self")) +:
@@ -538,14 +533,15 @@ object Raster {
         .join(occ, key)
         .select(col(idCol), col("cx"), col("cy"),
           when(col("self") === 1, col("dist"))
-            .otherwise(col("dist") + col("v")).as("d"),
+            .otherwise(graft.graph.Sssp.relax(col("dist"), col("v"))).as("d"),
           (lit(1) - col("self")).as("f"))
         .groupBy(key.map(col): _*)
         .agg(min(struct(col("d"), col("f"))).as("m"))
         .select(col(idCol), col("cx"), col("cy"),
           col("m.d").as("dist"), col("m.f").as("fresh"))
     }
-    out.select(col(idCol), col("cx"), col("cy"), col("dist"))
+    out.select(col(idCol), col("cx"), col("cy"),
+      graft.graph.Sssp.fits(col("dist"), "Raster.costDistance").as("dist"))
   }
 
   /** Bresenham-equivalent polyline rasterization: one cell per
@@ -610,7 +606,7 @@ object Raster {
     * (D rounds × 3 driver jobs); this is the identical field as ONE
     * linear plan. Every window partitions by a per-run key (id, axis,
     * run) — lattice-run sized, never a global sort. The BFS sibling
-    * survives as [[distanceTransformBfs]], pinned equal in RasterSpec.
+    * survives as RasterSpec's oracle, pinned equal there.
     */
   def distanceTransform(cells: DataFrame,
       idCol: String = "relation_id"): DataFrame = {
@@ -643,65 +639,5 @@ object Raster {
       .select(col(idCol), col("cx"), col("cy"),
         least(col("hgap"), col("lmin") + col("cx"),
           col("rmin") - col("cx")).as("dist"))
-  }
-
-  /** The level-synchronous inward-BFS distance transform the separable
-    * [[distanceTransform]] replaced — kept as the independent
-    * cross-oracle (RasterSpec pins the two equal on every fixture).
-    * One ×4 scatter + semi/anti join per erosion ring.
-    */
-  def distanceTransformBfs(cells: DataFrame, idCol: String = "relation_id",
-      maxRounds: Int = 512): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val occ = cells.select(col(idCol), col("cx").cast("long").as("cx"),
-        col("cy").cast("long").as("cy"))
-      .persist(lvl)
-    val offsets = Seq((-1, 0), (1, 0), (0, -1), (0, 1))
-    def scatter4(df: DataFrame): DataFrame =
-      df.select(col(idCol),
-          explode(array(offsets.map { case (dx, dy) =>
-            struct((col("cx") + dx).as("cx"), (col("cy") + dy).as("cy"))
-          }: _*)).as("t"))
-        .select(col(idCol), col("t.cx").as("cx"), col("t.cy").as("cy"))
-    val key = Seq(idCol, "cx", "cy")
-    // ring 1: occupied cells missing at least one rook neighbor
-    val full = scatter4(occ).groupBy(key.map(col): _*)
-      .agg(count(lit(1)).as("nn"))
-      .filter(col("nn") === 4)
-      .join(occ, key, "left_semi")
-    var labeled = occ.join(full, key, "left_anti")
-      .withColumn("dist", lit(1L))
-      .localCheckpoint(true)
-    var frontier = labeled
-    var round = 2
-    var done = false
-    while (!done) {
-      val next = scatter4(frontier.drop("dist")).distinct()
-        .join(occ, key, "left_semi")
-        .join(labeled.select(key.map(col): _*), key, "left_anti")
-        .withColumn("dist", lit(round.toLong))
-        .localCheckpoint(true)
-      if (next.isEmpty) {
-        next.unpersist()
-        if (frontier ne labeled) frontier.unpersist()
-        done = true
-      } else if (round > maxRounds) {
-        next.unpersist()
-        if (frontier ne labeled) frontier.unpersist()
-        labeled.unpersist()
-        occ.unpersist()
-        throw new IllegalStateException(
-          s"Raster.distanceTransformBfs did not converge within $maxRounds rounds")
-      } else {
-        val acc = labeled.unionByName(next).localCheckpoint(true)
-        labeled.unpersist()
-        if (frontier ne labeled) frontier.unpersist()
-        labeled = acc
-        frontier = next
-        round += 1
-      }
-    }
-    occ.unpersist()
-    labeled
   }
 }

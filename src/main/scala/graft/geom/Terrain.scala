@@ -138,52 +138,35 @@ object Terrain {
     * On a functional (out-degree ≤ 1) acyclic graph every pair is
     * produced exactly once — no distinct needed — and the loop ends in
     * ⌈log₂ L⌉ rounds. Total state is Σ path lengths (the same rows the
-    * answer needs), localCheckpoint cut per round.
+    * answer needs), cut by one [[graft.graph.Fixpoint]] checkpoint per
+    * round.
     */
   def flowAccumulation(flow: DataFrame, idCol: String = "relation_id",
       maxRounds: Int = 48): DataFrame = {
-    val cells = flow.select(col(idCol), col("cx"), col("cy"), col("dir")).persist(Lvl)
     val e = flow.filter(col("dir") >= 0)
       .select(col(idCol), col("cx").as("ucx"), col("cy").as("ucy"),
         col("nx").as("vcx"), col("ny").as("vcy"))
-    var reach = e.localCheckpoint(true)
-    var jump = reach
-    var round = 0
-    var done = jump.isEmpty
-    while (!done) {
-      round += 1
-      if (round > maxRounds) {
-        cells.unpersist(); reach.unpersist()
-        throw new IllegalStateException(
-          s"Terrain.flowAccumulation did not converge in $maxRounds doubling rounds")
-      }
+    // state: the reach rows (fresh 0) plus the jump rows (fresh 1) —
+    // every jump row is a pair at distance exactly 2^k, new that round,
+    // so the round whose jump comes out empty ends the loop (its last
+    // extension is already folded into reach). Init reads `e` once.
+    val init = e.select(col("*"), explode(array(lit(0), lit(1))).as("fresh"))
+    val state = graft.graph.Fixpoint.run(init, maxRounds, 1,
+        "Terrain.flowAccumulation") { (cur, _) =>
+      val reach = cur.filter(col("fresh") === 0)
+      val jump = cur.filter(col("fresh") === 1)
       val hop = jump.select(col(idCol), col("ucx"), col("ucy"),
         col("vcx").as("jcx"), col("vcy").as("jcy"))
-      val ext = hop.join(
-          reach.select(col(idCol), col("ucx").as("jcx"), col("ucy").as("jcy"),
+      def after(pairs: DataFrame, fresh: Int): DataFrame = hop.join(
+          pairs.select(col(idCol), col("ucx").as("jcx"), col("ucy").as("jcy"),
             col("vcx"), col("vcy")),
           Seq(idCol, "jcx", "jcy"))
-        .select(col(idCol), col("ucx"), col("ucy"), col("vcx"), col("vcy"))
-      val jump2 = hop.join(
-          jump.select(col(idCol), col("ucx").as("jcx"), col("ucy").as("jcy"),
-            col("vcx"), col("vcy")),
-          Seq(idCol, "jcx", "jcy"))
-        .select(col(idCol), col("ucx"), col("ucy"), col("vcx"), col("vcy"))
-        .localCheckpoint(true)
-      if (jump2.isEmpty) {
-        // last extension still outstanding: fold it in, then stop
-        val acc = reach.unionByName(ext).localCheckpoint(true)
-        reach.unpersist(); if (jump ne reach) jump.unpersist()
-        jump2.unpersist()
-        reach = acc
-        done = true
-      } else {
-        val acc = reach.unionByName(ext).localCheckpoint(true)
-        reach.unpersist(); if (jump ne reach) jump.unpersist()
-        reach = acc
-        jump = jump2
-      }
+        .select(col(idCol), col("ucx"), col("ucy"), col("vcx"), col("vcy"),
+          lit(fresh).as("fresh"))
+      reach.unionByName(after(reach, 0)).unionByName(after(jump, 1))
     }
+    val reach = state.filter(col("fresh") === 0)
+    val cells = flow.select(col(idCol), col("cx"), col("cy"), col("dir")).persist(Lvl)
     val up = reach.groupBy(col(idCol), col("vcx").as("cx"), col("vcy").as("cy"))
       .agg(count(lit(1)).as("upstream"))
     val out = cells.join(up, key(idCol), "left")
@@ -199,36 +182,22 @@ object Terrain {
     *
     * Plain pointer doubling on f(c) = next(c) (sinks fixed): f ← f∘f
     * until fixpoint; state stays one row per cell, ⌈log₂ L⌉ + 1 rounds,
-    * localCheckpoint per round.
+    * one [[graft.graph.Fixpoint]] checkpoint per round.
     */
   def sinkLabel(flow: DataFrame, idCol: String = "relation_id",
       maxRounds: Int = 48): DataFrame = {
-    var f = flow.select(col(idCol), col("cx"), col("cy"),
-        coalesce(col("nx"), col("cx")).as("fx"),
-        coalesce(col("ny"), col("cy")).as("fy"))
-      .localCheckpoint(true)
-    var round = 0
-    var done = false
-    while (!done) {
-      round += 1
-      if (round > maxRounds) {
-        f.unpersist()
-        throw new IllegalStateException(
-          s"Terrain.sinkLabel did not converge in $maxRounds doubling rounds")
-      }
-      val nxt = f.alias("a").join(
-          f.select(col(idCol), col("cx").as("fx"), col("cy").as("fy"),
+    val init = flow.select(col(idCol), col("cx"), col("cy"),
+      coalesce(col("nx"), col("cx")).as("fx"),
+      coalesce(col("ny"), col("cy")).as("fy"), lit(1).as("fresh"))
+    // a round marks the cells whose pointer moved
+    val f = graft.graph.Fixpoint.run(init, maxRounds, 1, "Terrain.sinkLabel") { (cur, _) =>
+      cur.alias("a").join(
+          cur.select(col(idCol), col("cx").as("fx"), col("cy").as("fy"),
             col("fx").as("gx2"), col("fy").as("gy2")).alias("b"),
           Seq(idCol, "fx", "fy"))
         .select(col(idCol), col("a.cx").as("cx"), col("a.cy").as("cy"),
           col("gx2").as("fx"), col("gy2").as("fy"),
-          (col("gx2") =!= col("fx") || col("gy2") =!= col("fy")).as("moved"))
-        .localCheckpoint(true)
-      val anyMoved = nxt.filter(col("moved")).limit(1).count() > 0
-      val settled = nxt.drop("moved").localCheckpoint(true)
-      f.unpersist(); nxt.unpersist()
-      f = settled
-      done = !anyMoved
+          (col("gx2") =!= col("fx") || col("gy2") =!= col("fy")).cast("int").as("fresh"))
     }
     f.select(col(idCol), col("cx"), col("cy"),
       col("fx").as("sink_cx"), col("fy").as("sink_cy"))

@@ -21,115 +21,27 @@ import scala.collection.mutable
   * the path for graphs that do not fit on the driver, for sessions with
   * broadcasting off, and for the all-pairs variants.
   *
-  * Level-synchronous frontier expansion, run as BLOCKED round fusion:
+  * Level-synchronous frontier expansion, run in [[Fixpoint]] blocks:
   * the per-round step is a SINGLE self-edge-augmented join + one hash
   * aggregation over the label state — self-edges carry every existing
   * label through the round while real edges expand only the
   * still-fresh frontier, so the state frame is referenced exactly once
-  * per round and a block of `blockRounds` rounds chains LAZILY with a
-  * linear plan. One lazy localCheckpoint + one count() action per
-  * block replaces the three driver jobs per round of the unfused loop
-  * (checkpoint, probe, accumulate) — on driver-latency-bound graphs
-  * (every fixture here; any loaded cluster) wall clock drops by the
-  * fusion factor while total shuffled bytes stay O(edges + labels ·
-  * rounds), the same as the unfused accumulate-per-round loop.
+  * per round and a block of 8 rounds chains LAZILY with a linear plan
+  * (the block's localCheckpoint cuts it, so a 20-hop graph never
+  * re-embeds its upstream more than 8 times). One checkpoint + probe
+  * job per block replaces the three driver jobs per round of the
+  * unfused loop (checkpoint, probe, accumulate), while total shuffled
+  * bytes stay O(edges + labels · rounds).
   *
   * The BFS invariant is untouched: a node's label is set exactly once,
   * at its minimum hop count — the min(struct(hops, fresh)) combine
   * prefers the existing label (fresh = 0) over any arrival, and fresh
-  * nodes expand exactly one round later, inside the same block.
-  * Convergence is detected from the label count at block boundaries
-  * (labels only ever grow; an unchanged count across ≥ 1 fused round
-  * means the frontier expanded nothing — the fixpoint). `maxRounds`
-  * semantics are preserved exactly: blocks are clamped to land a
-  * boundary at `maxRounds`, and one extra probe round decides between
-  * "converged in exactly maxRounds" (fine) and "still growing"
-  * (throws) — the same contract the unfused loop had.
-  *
-  * Plan-growth discipline: the block boundary's localCheckpoint
-  * truncates the logical plan (lazy — the count() that follows
-  * materializes it in the same job), so the per-block plan is
-  * `blockRounds` joins deep regardless of total rounds; a 20-hop graph
-  * never re-embeds its upstream more than `blockRounds` times.
+  * nodes expand exactly one round later, inside the same block. The
+  * `fresh` flag is also the runner's stop test: the block whose last
+  * round labelled nothing ends the loop, with [[Fixpoint]]'s exact
+  * `maxRounds` contract.
   */
 object Bfs {
-
-  /** Run `body(cur, roundNo)` as lazily-chained rounds with a
-    * localCheckpoint + count() at each block boundary; returns the
-    * converged state. `probe` returns (row count, convergence
-    * signature) in ONE action — count alone when labels are immutable;
-    * count + sum when values can improve. Preserves the exact maxRounds
-    * contract: converging in exactly `maxRounds` rounds succeeds,
-    * needing more throws.
-    */
-  private[graft] def runBlocked(init: DataFrame, maxRounds: Int,
-      blockRounds: Int, what: String,
-      probe: DataFrame => (Long, Seq[Any]))(body: (DataFrame, Int) => DataFrame): DataFrame = {
-    // AQE is scope-disabled for the fused blocks (the SnapshotTable
-    // commit precedent): a block is blockRounds chained join+aggregate
-    // stages whose shapes are fully known up front — tiny state, fixed
-    // keys, join side already decided from measured sizes (joinSide) —
-    // so adaptive re-planning has nothing to improve and charges one
-    // re-optimization round trip per stage to a loop whose whole cost
-    // IS stage latency. Static planning submits each stage the moment
-    // its parent finishes. In its place the loop sizes its own shuffle:
-    // the state row count is measured at every boundary anyway, so the
-    // next block's shuffle partition count derives from it (~100k rows
-    // per partition, clamped to the session setting) — the guide's
-    // "derive partitioning from input size" rule, which AQE coalescing
-    // would otherwise apply at per-stage replanning cost. A 128-row
-    // frontier stops paying 32 reduce tasks × blockRounds stages per
-    // block; a billion-row state keeps the session's full parallelism.
-    val spark = init.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prevAqe = spark.conf.get(aqeKey, "true")
-    val prevParts = spark.conf.get(partsKey, "200")
-    spark.conf.set(aqeKey, "false")
-    def tuneParts(stateRows: Long): Unit = {
-      val p = math.max(1L, math.min(prevParts.toLong, stateRows / 100000L + 1L))
-      spark.conf.set(partsKey, p.toString)
-    }
-    try {
-      var state = init.localCheckpoint(false)
-      var (n, sig) = probe(state) // materializes the lazy checkpoint too
-      var steps = 0
-      var done = false
-      while (!done) {
-        tuneParts(n)
-        val target = if (steps >= maxRounds) steps + 1 // single probe round
-          else math.min(steps + blockRounds, maxRounds)
-        var cur = state
-        while (steps < target) { cur = body(cur, steps + 1); steps += 1 }
-        val t0 = System.nanoTime()
-        val next = cur.localCheckpoint(false)
-        val t1 = System.nanoTime()
-        val (nextN, nextSig) = probe(next)
-        if (sys.env.contains("GRAFT_LOOP_DEBUG")) System.err.println(
-          f"[$what] steps=$steps cp=${(t1-t0)/1e9}%.3f probe=${(System.nanoTime()-t1)/1e9}%.3f n=$nextN")
-        if (nextSig == sig) {
-          done = true
-          state = next
-        } else if (steps > maxRounds) {
-          throw new IllegalStateException(
-            s"$what did not converge within $maxRounds rounds")
-        } else {
-          state = next
-          n = nextN
-          sig = nextSig
-        }
-      }
-      state
-    } finally {
-      spark.conf.set(aqeKey, prevAqe)
-      spark.conf.set(partsKey, prevParts)
-    }
-  }
-
-  private[graft] def countProbe(df: DataFrame): (Long, Seq[Any]) = {
-    val n = df.count()
-    (n, Seq(n))
-  }
 
   /** Rows that fit the session's broadcast threshold at the ~64
     * bytes/row of [[joinSide]]; -1 when broadcasting is off.
@@ -224,7 +136,7 @@ object Bfs {
     StructField("hops", LongType, nullable = true)))
 
   /** Level-synchronous multi-source BFS over an in-memory undirected edge
-    * list, with [[runBlocked]]'s `maxRounds` contract: a graph whose
+    * list, with [[Fixpoint]]'s `maxRounds` contract: a graph whose
     * farthest node is `maxRounds` levels out converges (the next round
     * finds nothing new), one level more throws.
     */
@@ -264,8 +176,7 @@ object Bfs {
     val dirPlus = joinSide(withSelfEdges(dir, Some(seedIds)))
     val init = seedIds.select(col("src").as("id"))
       .withColumn("hops", lit(0L)).withColumn("fresh", lit(1))
-    val out = runBlocked(init, maxRounds, 8, "Bfs.hops",
-        countProbe) { (cur, _) =>
+    val out = Fixpoint.run(init, maxRounds, 8, "Bfs.hops") { (cur, _) =>
       cur.withColumnRenamed("id", "src")
         .join(dirPlus, Seq("src"))
         .filter(col("self") === 1 || col("fresh") === 1)
@@ -301,8 +212,7 @@ object Bfs {
     val init = dirPlus.filter(col("self") === 1)
       .select(col("src").as("origin"), col("src").as("id"))
       .withColumn("hops", lit(0L)).withColumn("fresh", lit(1))
-    val out = runBlocked(init, maxRounds, 4, "Bfs.allPairsHops",
-        countProbe) { (cur, _) =>
+    val out = Fixpoint.run(init, maxRounds, 4, "Bfs.allPairsHops") { (cur, _) =>
       cur.withColumnRenamed("id", "src")
         .join(dirPlus, Seq("src"))
         .filter(col("self") === 1 || col("fresh") === 1)
@@ -344,8 +254,7 @@ object Bfs {
       .select(col("src").as("origin"), col("src").as("id"))
       .withColumn("hops", lit(0L)).withColumn("sigma", lit(1L))
       .withColumn("fresh", lit(1))
-    val out = runBlocked(init, maxRounds, 4, "Bfs.allPairsSigma",
-        countProbe) { (cur, _) =>
+    val out = Fixpoint.run(init, maxRounds, 4, "Bfs.allPairsSigma") { (cur, _) =>
       cur.withColumnRenamed("id", "src")
         .join(dirPlus, Seq("src"))
         .filter(col("self") === 1 || col("fresh") === 1)

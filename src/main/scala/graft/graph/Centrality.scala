@@ -83,11 +83,11 @@ object Centrality {
       .persist(lvl)
     val dir = und.select(col("a").as("src"), col("b").as("dst"))
       .union(und.select(col("b").as("src"), col("a").as("dst")))
-    // blocked round fusion (Bfs.runBlocked): self-edges carry the
+    // blocked round fusion (Fixpoint): self-edges carry the
     // visited set, real edges expand only the fresh frontier with the
     // origin's own edge excluded by the expansion predicate. The
     // per-round plan references the state once, so 8 rounds
-    // chain lazily with one checkpoint + count() per block. The old
+    // chain lazily with one checkpoint + probe job per block. The old
     // per-origin early retirement (stop once b is reached) traded
     // per-round driver jobs for less state — with fused rounds the
     // driver jobs dominate, so the walk simply runs to each component's
@@ -96,8 +96,8 @@ object Centrality {
     val dirPlus = Bfs.joinSide(Bfs.withSelfEdges(dir, None))
     val init = und.select(col("a"), col("b"), col("a").as("id"))
       .withColumn("fresh", lit(1))
-    val st = Bfs.runBlocked(init, maxRounds, 8,
-        "Centrality.bridges", Bfs.countProbe) { (cur, _) =>
+    val st = Fixpoint.run(init, maxRounds, 8,
+        "Centrality.bridges") { (cur, _) =>
       cur.withColumnRenamed("id", "s")
         .join(dirPlus.withColumnRenamed("src", "s"), Seq("s"))
         .filter(col("self") === 1 || (col("fresh") === 1 &&
@@ -157,16 +157,16 @@ object Centrality {
       .select(col("v"), lit(0L).as("kind"), col("seed").as("id"))
     val coverSeeds = deg.select(col("v"), lit(1L).as("kind"),
       col("v").as("id"))
-    // blocked round fusion (Bfs.runBlocked): self-edges carry the
+    // blocked round fusion (Fixpoint): self-edges carry the
     // visited set, real edges expand only the fresh frontier, with the
     // removal walk's v-avoidance folded into the expansion predicate —
-    // one state reference per round, one checkpoint + count() per block
-    // instead of three driver jobs per round.
+    // one state reference per round, one checkpoint + probe job per
+    // block instead of three driver jobs per round.
     val dirPlus = Bfs.joinSide(Bfs.withSelfEdges(
       dir.select(col("s").as("src"), col("d").as("dst")), None))
     val init = removalSeeds.unionByName(coverSeeds).withColumn("fresh", lit(1))
-    val dist = Bfs.runBlocked(init, maxRounds, 8,
-        "Centrality.articulation", Bfs.countProbe) { (cur, _) =>
+    val dist = Fixpoint.run(init, maxRounds, 8,
+        "Centrality.articulation") { (cur, _) =>
       cur.withColumnRenamed("id", "s")
         .join(dirPlus.withColumnRenamed("src", "s"), Seq("s"))
         .filter(col("self") === 1 || (col("fresh") === 1 &&

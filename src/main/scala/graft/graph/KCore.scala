@@ -16,16 +16,17 @@ import org.apache.spark.sql.functions._
   * undirected view) and a filter keeping edges whose both endpoints
   * retain degree ≥ k — the edge frame is referenced exactly once per
   * round (the old aggregate → anti-join × 2 shape read it three times),
-  * so rounds chain lazily through [[Bfs.runBlocked]]: 8
-  * peels per localCheckpoint + count() action instead of three driver
+  * so rounds chain lazily through [[Fixpoint]]: 8
+  * peels per localCheckpoint + probe job instead of three driver
   * jobs per peel. The windows have no ORDER BY (unbounded frame —
   * node-partitioned count, no sort) and partitions are node-degree
   * sized, the same distribution a degree groupBy has. Edges only ever
-  * leave, so the edge count at a block boundary is a complete fixpoint
-  * signature. A path at k=2 still peels only its two endpoints per
-  * round — O(n) rounds worst case — but now at O(n / 8)
-  * driver round-trips; non-convergence inside `maxRounds` peels throws
-  * loudly (a truncated peel would silently overstate the core).
+  * leave — a round marks no row fresh — so the loop runs as a shrinking
+  * one: an edge count unchanged across a block is the fixpoint. A path
+  * at k=2 still peels only its two endpoints per round — O(n) rounds
+  * worst case — but now at O(n / 8) driver round-trips; non-convergence
+  * inside `maxRounds` peels throws loudly (a truncated peel would
+  * silently overstate the core).
   */
 object KCore {
 
@@ -44,12 +45,12 @@ object KCore {
       .distinct()
     val wS = Window.partitionBy(col("src"))
     val wD = Window.partitionBy(col("dst"))
-    val core = Bfs.runBlocked(und, maxRounds, 8,
-        s"kCore(k=$k)", Bfs.countProbe) { (cur, _) =>
+    val core = Fixpoint.run(und.withColumn("fresh", lit(1)), maxRounds, 8,
+        s"kCore(k=$k)", shrinks = true) { (cur, _) =>
       cur.withColumn("ds", count(lit(1)).over(wS))
         .withColumn("dd", count(lit(1)).over(wD))
         .filter(col("ds") >= k && col("dd") >= k)
-        .select(col("src"), col("dst"))
+        .select(col("src"), col("dst"), lit(0).as("fresh"))
     }
     core.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("core_degree"))

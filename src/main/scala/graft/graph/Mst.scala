@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
 
 /** Minimum spanning forest via distributed Borůvka — the log-round MST
   * algorithm that actually parallelizes (Kruskal's sort is inherently
@@ -19,7 +20,7 @@ import org.apache.spark.storage.StorageLevel
   * merges through [[graft.dedup.Dedup.connectedComponents]] (driver
   * union-find while it fits a broadcast, star contraction above that). Rounds are
   * O(log V) — Borůvka at least halves the component count every round.
-  * Eager localCheckpoint per round ([[Bfs.hops]] discipline).
+  * Rounds run through [[Fixpoint]], one round per checkpoint.
   */
 object Mst {
 
@@ -40,12 +41,13 @@ object Mst {
       .persist(lvl)
     val nodes = und.select(col("a").as("id"))
       .union(und.select(col("b").as("id"))).distinct()
-    var comp = nodes.select(col("id"), col("id").as("c"))
-      .localCheckpoint(true)
-    var forest: DataFrame = null
-    var round = 1
-    var done = false
-    while (!done) {
+    // one Fixpoint round per Borůvka round (the state, comp, is read
+    // three times per round); a round marks the nodes it relabelled
+    // fresh, so the round that picks no edge ends the loop. The forest,
+    // the loop's second output, collects each round's picked edges.
+    val picks = mutable.ArrayBuffer.empty[DataFrame]
+    val init = nodes.select(col("id"), col("id").as("c"), lit(1).as("fresh"))
+    try Fixpoint.run(init, maxRounds, 1, "Mst.boruvka") { (comp, _) =>
       val ca = comp.select(col("id").as("a"), col("c").as("ca"))
       val cb = comp.select(col("id").as("b"), col("c").as("cb"))
       val cross = und.join(ca, Seq("a")).join(cb, Seq("b"))
@@ -65,38 +67,18 @@ object Mst {
           col("m.ca").as("ca"), col("m.cb").as("cb"))
         .distinct()
         .localCheckpoint(true)
-      if (picked.isEmpty) {
-        picked.unpersist()
-        done = true
-      } else if (round > maxRounds) {
-        picked.unpersist()
-        comp.unpersist()
-        und.unpersist()
-        throw new IllegalStateException(
-          s"Mst.boruvka did not converge within $maxRounds rounds")
-      } else {
-        val pickedEdges = picked.select(col("a"), col("b"), col("w"))
-        forest =
-          if (forest == null) pickedEdges
-          else forest.unionByName(pickedEdges).localCheckpoint(true)
-        // contract: merged components re-label to their new CC's min —
-        // the picked-edge graph (on COMPONENT labels) is component-
-        // count-sized by construction
-        val merged = graft.dedup.Dedup.connectedComponents(spark,
-          picked.select(col("ca").as("src"), col("cb").as("dst")))
-        val relabel = comp.join(merged, comp("c") === merged("id"), "left")
-          .select(comp("id"), coalesce(col("component"), col("c")).as("c"))
-          .localCheckpoint(true)
-        comp.unpersist()
-        comp = relabel
-        round += 1
-      }
-    }
-    comp.unpersist()
-    und.unpersist()
-    if (forest == null)
-      spark.range(0).select(col("id").as("src"), col("id").as("dst"),
-        col("id").as("w"))
-    else forest.select(col("a").as("src"), col("b").as("dst"), col("w"))
+      picks += picked.select(col("a"), col("b"), col("w"))
+      // contract: merged components re-label to their new CC's min —
+      // the picked-edge graph (on COMPONENT labels) is component-
+      // count-sized by construction
+      val merged = graft.dedup.Dedup.connectedComponents(spark,
+        picked.select(col("ca").as("src"), col("cb").as("dst")))
+      comp.join(merged, comp("c") === merged("id"), "left")
+        .select(comp("id"), coalesce(col("component"), col("c")).as("c"),
+          (coalesce(col("component"), col("c")) =!= col("c")).cast("int").as("fresh"))
+    } finally und.unpersist()
+    picks.reduceOption(_ unionByName _).fold(spark.range(0).select(
+        col("id").as("src"), col("id").as("dst"), col("id").as("w")))(
+      _.select(col("a").as("src"), col("b").as("dst"), col("w")))
   }
 }

@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   * edges by src so the join is exchange-free), one groupBy(dst) shuffle
   * for the contribution sums, one left join back to the node set. That is
   * the canonical BSP round; nothing is driver-sized except the loop
-  * counter. Fixed `iters` keeps the plan a linear DAG; a convergence-
-  * tested variant would checkpoint each round (same policy as
-  * [[graft.dedup.Dedup.starContraction]]'s lineage cuts).
+  * counter. Fixed `iters` keeps the plan a linear DAG and needs no stop
+  * test; a convergence-tested variant would run through
+  * [[Fixpoint]], marking the ranks a round moved fresh.
   *
   * Dangling nodes (no out-edges) leak their mass — the classic simplest
   * variant, stated rather than hidden; redistribute-to-all needs one
@@ -84,9 +84,10 @@ object PageRank {
   * normalization would hash-diverge. Each half-step is one equi-join +
   * one groupBy (the PageRank round shape); the rescale divisor arrives
   * as a BROADCAST one-row aggregate joined into the half-step — no
-  * driver-side scalar reads. Each half-step's raw sums are eagerly
-  * lineage-cut (`localCheckpoint(true)`, the same per-round policy as
-  * [[graft.dedup.Dedup.starContraction]]): the rescale references the
+  * driver-side scalar reads. Fixed `iters`, so no [[Fixpoint]] stop
+  * test. Each half-step's raw sums are lineage-cut
+  * (`localCheckpoint`, as a one-round [[Fixpoint]] block cuts a state
+  * read more than once per round): the rescale references the
   * raw frame TWICE (left join + max aggregate), so an uncut plan tree
   * doubles per half-step and analysis time grows 2^rounds — with the cut
   * it is constant-size, one node-sized checkpoint per half-step. (On a
@@ -140,7 +141,8 @@ object Hits {
     val nodes = e.select(col("src").as("doc_id"))
       .union(e.select(col("dst").as("doc_id"))).distinct()
     // materialize (node-sized, the house policy for iterative results —
-    // see Dedup.starContraction) so the cached inputs can be released
+    // see Dedup.starContraction's labels) so the cached inputs can be
+    // released
     val out = nodes
       .join(hub, Seq("doc_id"), "left")
       .join(auth, Seq("doc_id"), "left")

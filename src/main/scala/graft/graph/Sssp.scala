@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import scala.util.chaining._
@@ -23,16 +23,19 @@ import scala.util.chaining._
   * carry fresh = 0), so only STRICT improvements re-expand — the same
   * rule the unfused loop enforced with its left-join filter.
   *
-  * Distances are monotone non-increasing once set and the label set
-  * only grows, so the (count, sum) pair at a block boundary is a
-  * complete convergence signature: equal pairs across a block of ≥ 1
-  * full relaxation rounds means a fixpoint. With positive integer
+  * A round marks the labels it set or strictly improved fresh, so
+  * [[Fixpoint]] stops at the end of the block whose last round improved
+  * nothing — no sum over the distances, which could wrap a Long on a
+  * graph whose every distance fits. A relaxation that would pass
+  * Long.MaxValue saturates there instead of failing the round (any path
+  * that fits replaces it), and a distance still saturated at the
+  * fixpoint fails the job: it does not fit a Long. With positive integer
   * weights every improvement lowers a Long, so the loop still empties
   * in at most V rounds; negative or zero weights are rejected IN-PLAN
   * by a raise_error conjunct on the edge load (the PointPattern guard
   * pattern), so a bad weight fails the job even under filter pushdown
   * rather than spinning the driver loop. `maxRounds` keeps the exact
-  * [[Bfs.hops]] contract (exactly-maxRounds convergence succeeds).
+  * [[Fixpoint]] contract (exactly-maxRounds convergence succeeds).
   */
 object Sssp {
 
@@ -60,28 +63,27 @@ object Sssp {
       .pipe(Bfs.joinSide) // accurate cached stats for the loop's join planning
     val init = seedIds.select(col("src").as("id"))
       .withColumn("dist", lit(0L)).withColumn("fresh", lit(1))
-    // distances can IMPROVE after first assignment, so the convergence
-    // signature needs the value sum alongside the label count: labels
-    // only grow and values only shrink, so (count, sum) is unchanged
-    // iff nothing was added and nothing improved
-    def probe(df: DataFrame): (Long, Seq[Any]) = {
-      val r = df.agg(count(lit(1)), sum(col("dist"))).collect()(0)
-      val n = r.getLong(0)
-      (n, Seq(n, if (r.isNullAt(1)) 0L else r.getLong(1)))
-    }
-    val out = Bfs.runBlocked(init, maxRounds, 8, "Sssp.distances",
-        probe) { (cur, _) =>
+    val out = Fixpoint.run(init, maxRounds, 8, "Sssp.distances") { (cur, _) =>
       cur.withColumnRenamed("id", "src")
         .join(dirPlus, Seq("src"))
         .filter(col("self") === 1 || col("fresh") === 1)
         .select(col("dst"),
           when(col("self") === 1, col("dist"))
-            .otherwise(col("dist") + col("w")).as("d"),
+            .otherwise(relax(col("dist"), col("w"))).as("d"),
           (lit(1) - col("self")).as("f"))
         .groupBy(col("dst"))
         .agg(min(struct(col("d"), col("f"))).as("m"))
         .select(col("dst").as("id"), col("m.d").as("dist"), col("m.f").as("fresh"))
     }
-    out.select(col("id"), col("dist"))
+    out.select(col("id"), fits(col("dist"), "Sssp.distances").as("dist"))
   }
+
+  /** `dist + w` for a positive `w`, saturated at Long.MaxValue. */
+  private[graft] def relax(dist: Column, w: Column): Column =
+    when(dist > lit(Long.MaxValue) - w, lit(Long.MaxValue)).otherwise(dist + w)
+
+  /** A converged distance, or a failed job where it is still saturated. */
+  private[graft] def fits(dist: Column, what: String): Column =
+    when(dist < Long.MaxValue, dist).otherwise(
+      raise_error(lit(s"$what: a distance does not fit a Long")).cast("long"))
 }

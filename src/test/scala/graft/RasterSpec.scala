@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.geom.{Geom, Pt, PolygonRow, Raster}
 
@@ -234,7 +235,7 @@ class RasterSpec extends AnyFunSuite {
     val cells = Raster.rasterize(polyDF(lShape, comb, twoRings), 1.0)
     val sep = Raster.distanceTransform(cells)
       .as[(Long, Long, Long, Long)].collect().toSet
-    val bfs = Raster.distanceTransformBfs(cells)
+    val bfs = RasterSpec.distanceTransformBfs(cells)
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(sep === bfs)
   }
@@ -491,5 +492,67 @@ class RasterSpec extends AnyFunSuite {
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(got === Set((1L, 0L, 0L, 1L), (1L, 1L, 0L, 1L), (1L, 0L, 1L, 1L),
       (1L, 1L, 1L, 1L), (2L, 2L, 0L, 1L)))
+  }
+}
+
+object RasterSpec {
+  /** The level-synchronous inward-BFS distance transform the separable
+    * [[Raster.distanceTransform]] replaced — kept as the independent
+    * cross-oracle (pinned equal to it on every fixture above).
+    * One ×4 scatter + semi/anti join per erosion ring.
+    */
+  def distanceTransformBfs(cells: DataFrame, idCol: String = "relation_id",
+      maxRounds: Int = 512): DataFrame = {
+    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val occ = cells.select(col(idCol), col("cx").cast("long").as("cx"),
+        col("cy").cast("long").as("cy"))
+      .persist(lvl)
+    val offsets = Seq((-1, 0), (1, 0), (0, -1), (0, 1))
+    def scatter4(df: DataFrame): DataFrame =
+      df.select(col(idCol),
+          explode(array(offsets.map { case (dx, dy) =>
+            struct((col("cx") + dx).as("cx"), (col("cy") + dy).as("cy"))
+          }: _*)).as("t"))
+        .select(col(idCol), col("t.cx").as("cx"), col("t.cy").as("cy"))
+    val key = Seq(idCol, "cx", "cy")
+    // ring 1: occupied cells missing at least one rook neighbor
+    val full = scatter4(occ).groupBy(key.map(col): _*)
+      .agg(count(lit(1)).as("nn"))
+      .filter(col("nn") === 4)
+      .join(occ, key, "left_semi")
+    var labeled = occ.join(full, key, "left_anti")
+      .withColumn("dist", lit(1L))
+      .localCheckpoint(true)
+    var frontier = labeled
+    var round = 2
+    var done = false
+    while (!done) {
+      val next = scatter4(frontier.drop("dist")).distinct()
+        .join(occ, key, "left_semi")
+        .join(labeled.select(key.map(col): _*), key, "left_anti")
+        .withColumn("dist", lit(round.toLong))
+        .localCheckpoint(true)
+      if (next.isEmpty) {
+        next.unpersist()
+        if (frontier ne labeled) frontier.unpersist()
+        done = true
+      } else if (round > maxRounds) {
+        next.unpersist()
+        if (frontier ne labeled) frontier.unpersist()
+        labeled.unpersist()
+        occ.unpersist()
+        throw new IllegalStateException(
+          s"Raster.distanceTransformBfs did not converge within $maxRounds rounds")
+      } else {
+        val acc = labeled.unionByName(next).localCheckpoint(true)
+        labeled.unpersist()
+        if (frontier ne labeled) frontier.unpersist()
+        labeled = acc
+        frontier = next
+        round += 1
+      }
+    }
+    occ.unpersist()
+    labeled
   }
 }
