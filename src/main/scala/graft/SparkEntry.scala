@@ -620,10 +620,11 @@ object SparkEntry {
         .groupBy(col("cell")).agg(count(lit(1)).as("n"))
     }),
 
-    // PIP spatial join — written DECLARATIVELY as the ray-cast theta join so
-    // the PipJoinRewrite optimizer rule (not the hand-built SpatialJoin
-    // plan, which the flagship covers) produces the cell-indexed form under
-    // the oracle; oracle is the BETWEEN form over the same rectangles.
+    // PIP spatial join — written DECLARATIVELY as the ray-cast theta join;
+    // the PipJoinRewrite optimizer rule turns it into the cell-indexed plan
+    // SpatialJoin.assign builds (the flagship calls assign directly), so
+    // the oracle checks the rule's entry point; oracle is the BETWEEN form
+    // over the same rectangles.
     "q12_pip_join" -> ((s, dir) => {
       import s.implicits._
       graft.plans.PipJoinRewrite.install(s)

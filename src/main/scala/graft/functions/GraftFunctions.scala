@@ -13,7 +13,8 @@ import org.apache.spark.sql.types._
   *   whole-stage friendly, SQL-expressible for the DuckDB oracle) — no UDF.
   * - ray-cast point-in-polygon is a native Catalyst `Expression` evaluating
   *   directly over `ArrayData`/`InternalRow` (no per-row encoder round trip,
-  *   no Scala-UDF boxing); CodegenFallback for v1.
+  *   no Scala-UDF boxing), with `doGenCode` calling the static kernel so the
+  *   refine stays inside whole-stage codegen.
   */
 object GraftFunctions {
 

@@ -25,14 +25,10 @@ import graft.functions.GraftFunctions
   * none, the other twelve carry one). All integer arithmetic — exact in any engine.
   *
   * Scale shape: rasterize is explode → explode → filter, all narrow; the
-  * lattice explode is bounded by bbox area / cell². One polygon's whole
-  * raster stays in one task chain unless `spreadRows` inserts a
-  * repartition on (polygon, row) between the two explodes — at planetary
-  * bbox sizes that exchange is what keeps a single giant polygon from
-  * serializing an executor. Marching squares is one scatter flatMap
-  * (×4, narrow) and ONE hash exchange (the block groupBy), keyed on
-  * (polygon, block) — uniform unless one polygon dominates the raster,
-  * which the same row-spread addresses upstream.
+  * lattice explode is bounded by bbox area / cell², and one polygon's
+  * whole raster stays in one task chain. Marching squares is one scatter
+  * flatMap (×4, narrow) and ONE hash exchange (the block groupBy), keyed
+  * on (polygon, block) — uniform unless one polygon dominates the raster.
   */
 object Raster {
 
@@ -42,8 +38,7 @@ object Raster {
     * semantics, holes not subtracted — reference parity, see
     * [[Geom.containsPoint]]).
     */
-  def rasterize(polys: DataFrame, cell: Double, idCol: String = "relation_id",
-      spreadRows: Boolean = false): DataFrame = {
+  def rasterize(polys: DataFrame, cell: Double, idCol: String = "relation_id"): DataFrame = {
     require(cell > 0, s"cell=$cell must be positive")
     val spark = polys.sparkSession
     GraftFunctions.register(spark)
@@ -54,11 +49,9 @@ object Raster {
     }
     val (cy0, cy1) = axisRange("lat")
     val (cx0, cx1) = axisRange("lon")
-    val rows = polys
+    polys
       .select(col(idCol), col("rings"),
         cx0.as("cx0"), cx1.as("cx1"), explode(sequence(cy0, cy1)).as("cy"))
-    val spread = if (spreadRows) rows.repartition(col(idCol), col("cy")) else rows
-    spread
       .select(col(idCol), col("rings"), col("cy"),
         explode(sequence(col("cx0"), col("cx1"))).as("cx"))
       .filter(GraftFunctions.rayCastContains(col("rings"),
@@ -221,8 +214,7 @@ object Raster {
     * occupied cells keeps output cells = input cells (isolated cells
     * keep cnt 0 / sum 0). Never a cell×cell join — at a planet-raster
     * 100 TB burn the scatter stays linear and the exchange is keyed on
-    * (polygon, cell), uniform unless one polygon dominates, which
-    * [[rasterize]]'s spreadRows addresses upstream.
+    * (polygon, cell), uniform unless one polygon dominates.
     */
   def focalStats(cells: DataFrame, idCol: String = "relation_id"): DataFrame = {
     // occ feeds the scatter AND the join-back — persisted so the burn

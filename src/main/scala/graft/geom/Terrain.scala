@@ -55,7 +55,7 @@ object Terrain {
     * wx = ox·(2−|oy|), wy = oy·(2−|ox|) — no per-neighbor pivot.
     */
   def slopeAspect(cells: DataFrame, idCol: String = "relation_id"): DataFrame = {
-    val occ = occOf(cells, idCol).persist(Lvl)
+    val occ = occOf(cells, idCol)
     val scattered = occ.select(col(idCol), col("z"),
         explode(array(Dirs.map { case (dx, dy) =>
           struct((col("cx") + dx).as("cx"), (col("cy") + dy).as("cy"),
@@ -76,13 +76,11 @@ object Terrain {
         .when(col("gx") < 0 && col("gy") >= 0, when(ax < ay, 2L).otherwise(3L))
         .when(col("gx") < 0 && col("gy") < 0, when(ax >= ay, 4L).otherwise(5L))
         .otherwise(when(ax < ay, 6L).otherwise(7L))
-    val out = occ.join(grads, key(idCol))
+    occ.join(grads, key(idCol))
       .select(col(idCol), col("cx"), col("cy"), col("z"), col("gx"), col("gy"),
         (col("gx") * col("gx") + col("gy") * col("gy")).as("slope2"),
         octant.as("octant"),
         (col("gy") - col("gx")).as("shade"))
-    occ.unpersist(blocking = false)
-    out
   }
 
   /** D8 steepest-descent flow direction: per cell the neighbor with the
@@ -99,7 +97,7 @@ object Terrain {
     * max(struct(drop, −dir, nx, ny)) — no window.
     */
   def d8Flow(cells: DataFrame, idCol: String = "relation_id"): DataFrame = {
-    val occ = occOf(cells, idCol).persist(Lvl)
+    val occ = occOf(cells, idCol)
     // source (cx,cy,z) lands on neighbor target (cx+dx, cy+dy); seen from
     // the target, the source sits in direction (k+4)%8 and IS the
     // downstream candidate (target's neighbor), so nx/ny = source cell
@@ -119,11 +117,9 @@ object Terrain {
         (-col("dir")).as("negd"), col("nx"), col("ny"))).as("m"))
       .select(col(idCol), col("cx"), col("cy"), (-col("m.negd")).as("dir"),
         col("m.nx").as("nx"), col("m.ny").as("ny"))
-    val out = occ.join(best, key(idCol), "left")
+    occ.join(best, key(idCol), "left")
       .select(col(idCol), col("cx"), col("cy"), col("z"),
         coalesce(col("dir"), lit(-1L)).as("dir"), col("nx"), col("ny"))
-    occ.unpersist(blocking = false)
-    out
   }
 
   /** Flow accumulation over a [[d8Flow]] forest: per cell 1 + the number
@@ -166,14 +162,12 @@ object Terrain {
       reach.unionByName(after(reach, 0)).unionByName(after(jump, 1))
     }
     val reach = state.filter(col("fresh") === 0)
-    val cells = flow.select(col(idCol), col("cx"), col("cy"), col("dir")).persist(Lvl)
+    val cells = flow.select(col(idCol), col("cx"), col("cy"), col("dir"))
     val up = reach.groupBy(col(idCol), col("vcx").as("cx"), col("vcy").as("cy"))
       .agg(count(lit(1)).as("upstream"))
-    val out = cells.join(up, key(idCol), "left")
+    cells.join(up, key(idCol), "left")
       .select(col(idCol), col("cx"), col("cy"), col("dir"),
         (lit(1L) + coalesce(col("upstream"), lit(0L))).as("acc"))
-    cells.unpersist(blocking = false)
-    out
   }
 
   /** Watershed labeling over a [[d8Flow]] forest: per cell the terminal

@@ -116,36 +116,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
   }
 
-  /** Element-wise vector MEAN with map-side partial aggregation — the
-    * reduction IVF training needs: the shuffle carries one (dim+1)-length
-    * partial per (partition, centroid), never per-row vectors. Buffer slot
-    * `dim` holds the count.
-    */
-  final class VecMeanAgg(dim: Int) extends org.apache.spark.sql.expressions.Aggregator[
-      (Int, Seq[Float]), Array[Double], Seq[Double]] {
-    override def zero: Array[Double] = new Array[Double](dim + 1)
-    override def reduce(acc: Array[Double], row: (Int, Seq[Float])): Array[Double] = {
-      val v = row._2
-      var i = 0
-      while (i < dim && i < v.length) { acc(i) += v(i); i += 1 }
-      acc(dim) += 1
-      acc
-    }
-    override def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
-      var i = 0
-      while (i <= dim) { a(i) += b(i); i += 1 }
-      a
-    }
-    override def finish(acc: Array[Double]): Seq[Double] = {
-      val n = math.max(acc(dim), 1.0)
-      (0 until dim).map(i => acc(i) / n)
-    }
-    override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Double]] =
-      org.apache.spark.sql.Encoders.kryo[Array[Double]]
-    override def outputEncoder: org.apache.spark.sql.Encoder[Seq[Double]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
-  }
-
   /** Same nearest-centroid math on the driver and in the executor UDF —
     * one kernel so assignment can never diverge between train and query.
     */
@@ -239,38 +209,11 @@ object Similarity {
     cents
   }
 
-  /** Distributed quantizer training over the FULL corpus with the
-    * map-side-combining VecMeanAgg — the shuffle carries one (dim+1)-length
-    * partial per (partition, centroid), never per-row vectors. Costs
-    * 2 Spark jobs per Lloyd iteration; reach for it only when the quantizer
-    * must see every vector rather than a bounded sample.
-    */
-  private[sim] def trainIvfDistributed(spark: SparkSession, c: DataFrame,
-      init: Array[(Int, Array[Double])], dim: Int, iters: Int): Array[(Int, Array[Double])] = {
-    import spark.implicits._
-    val mean = new VecMeanAgg(dim).toColumn
-    var centroids = init
-    var it = 0
-    while (it < iters) {
-      val cents = centroids
-      // null cid = corrupt embedding (null vector/element, NaN) — the
-      // quarantine filter sampleCorpus applies on the default training
-      // path; without it the non-nullable Int encoder aborts the job
-      val assigned = c.withColumn("cid", nearestCidCol(spark, col("ce"), cents))
-        .filter(col("cid").isNotNull)
-        .select(col("cid"), col("ce")).as[(Int, Seq[Float])]
-      centroids = assigned.groupByKey(_._1).agg(mean).collect()
-        .map { case (cid, m) => (cid, m.toArray) }
-      it += 1
-    }
-    centroids
-  }
-
   /** IVF-flat ANN (the other scale path the driver prompt names next to
     * LSH): a coarse quantizer (Lloyd's k-means, trained on a deterministic
-    * bounded sample on the driver — or on the full corpus via
-    * `distributedTrain`) partitions the corpus into `nlist` inverted lists;
-    * each query exactly reranks only the `nprobe` nearest lists.
+    * bounded sample on the driver) partitions the corpus into `nlist`
+    * inverted lists; each query exactly reranks only the `nprobe` nearest
+    * lists.
     *
     * Query-time scale shape: the corpus never shuffles — the (tiny) probe
     * assignments broadcast into the list-filtered scan; at 100 TB the
@@ -285,8 +228,7 @@ object Similarity {
     */
   def ivfTopK(spark: SparkSession, queries: DataFrame, corpus: DataFrame, k: Int,
       nlist: Int = 16, nprobe: Int = 4, iters: Int = 3,
-      qId: String = "vec_id", cId: String = "vec_id",
-      distributedTrain: Boolean = false): DataFrame = {
+      qId: String = "vec_id", cId: String = "vec_id"): DataFrame = {
     val c = corpus.select(col(cId).cast("long").as("neighbor_id"),
       col("embedding").as("ce"))
 
@@ -294,12 +236,7 @@ object Similarity {
     require(sample.nonEmpty, "ivfTopK: empty corpus")
     val dim = sample.head.length
 
-    val centroids =
-      if (distributedTrain)
-        trainIvfDistributed(spark, c,
-          sample.take(nlist).zipWithIndex.map { case (v, i) => (i, v.map(_.toDouble)) },
-          dim, iters)
-      else kmeansDriver(sample, nlist, iters)
+    val centroids = kmeansDriver(sample, nlist, iters)
 
     val q = queries.select(col(qId).cast("long").as("query_id"), col("embedding").as("qe"))
       .withColumn("cid", explode(probesCol(spark, col("qe"), centroids, nprobe)))

@@ -297,4 +297,82 @@ class SpatialJoinSpec extends AnyFunSuite {
 
     assert(got == want)
   }
+
+  for (f <- SpatialJoinSpec.fixtures)
+    test(s"assign equals brute force: ${f.name}") {
+      val got = graft.join.SpatialJoin.assign(spark, f.probes(spark),
+          spark.createDataset(f.polys), res = 7, idCol = "pid")
+        .select("pid", "relation_id").as[(Long, Long)].collect().toSeq.sorted
+      assert(got === f.bruteForce)
+    }
+
+  test("the fixtures are not trivial") {
+    for (f <- SpatialJoinSpec.fixtures) assert(f.bruteForce.nonEmpty, f.name)
+    val Seq(multi) = SpatialJoinSpec.fixtures.filter(_.name == "two cover resolutions")
+    assert(multi.polys.map(p => graft.join.SpatialJoin.cover(p.rings, 7)._1).distinct.size >= 2)
+  }
+
+  test("assign keeps its output columns and their order") {
+    val f = SpatialJoinSpec.fixtures.head
+    val out = graft.join.SpatialJoin.assign(spark, f.probes(spark),
+      spark.createDataset(f.polys), res = 7, idCol = "pid")
+    assert(out.columns.toSeq === Seq("relation_id", "cell", "pid", "lat", "lon", "polygon_name"))
+  }
+}
+
+/** PIP fixtures both entry points are held to: each probe is paired with
+  * every polygon row whose rings contain it (`Geom.containsPoint`), one
+  * result row per polygon row, nulls never matching.
+  */
+object SpatialJoinSpec {
+  import graft.geom.{Geom, PolygonRow, Pt}
+
+  final case class Fixture(name: String, polys: Seq[PolygonRow],
+      points: Seq[(Long, Option[Double], Option[Double])]) {
+    def probes(spark: org.apache.spark.sql.SparkSession) = {
+      import spark.implicits._
+      points.toDF("pid", "lat", "lon")
+    }
+    def bruteForce: Seq[(Long, Long)] = (for {
+      (pid, Some(la), Some(lo)) <- points
+      p <- polys if Geom.containsPoint(p.rings, la, lo)
+    } yield (pid, p.relation_id)).sorted
+  }
+
+  private def ring(pts: (Double, Double)*): Seq[Pt] = pts.map { case (la, lo) => Pt(la.toFloat, lo.toFloat) }
+  private def points(ps: Seq[(Double, Double)]) =
+    ps.zipWithIndex.map { case ((la, lo), i) => (i.toLong, Some(la), Some(lo)) }
+
+  // res-7 cells are 1.40625° of lat by 2.8125° of lon; the square's
+  // corners sit on cell corners
+  private val dLat = 180.0 / 128; private val dLon = 360.0 / 128
+  private val square = PolygonRow("square", Seq(ring((4 * dLat, 4 * dLon), (4 * dLat, 8 * dLon),
+    (8 * dLat, 8 * dLon), (8 * dLat, 4 * dLon))), 1L, 8L)
+  private val triangle = PolygonRow("triangle",
+    Seq(ring((0.3, 0.7), (3.9, 1.1), (2.2, 6.6))), 2L, 8L)
+  private def vertices(ps: PolygonRow*) =
+    for (p <- ps; r <- p.rings; v <- r) yield (v.lat.toDouble, v.lon.toDouble)
+
+  val fixtures: Seq[Fixture] = Seq(
+    // a half-cell lattice: every cell edge and corner in the area, plus the
+    // polygons' own vertices
+    Fixture("probes on cell edges and polygon vertices", Seq(square, triangle), points(
+      (for (i <- -2 to 20; k <- -2 to 20) yield (i * dLat / 2, k * dLon / 2)) ++
+        vertices(square, triangle))),
+    Fixture("a polygon with a hole", Seq(PolygonRow("annulus", Seq(
+        ring((-40, -40), (-40, -20), (-20, -20), (-20, -40)),
+        ring((-35, -35), (-35, -25), (-25, -25), (-25, -35))), 3L, 8L)),
+      points(for (i <- 0 to 9; k <- 0 to 9) yield (-42 + 2.5 * i, -42 + 2.5 * k))),
+    // the pentagon's bbox spans > 4096 res-7 cells, so it covers at res 6
+    // while the square stays at res 7
+    Fixture("two cover resolutions", Seq(square, PolygonRow("continent", Seq(
+        ring((-80, -170), (-80, 30), (10, 40), (40, -60), (20, -165))), 4L, 2L)),
+      (0L until 600L).map(k => (k,
+        Some(((k * 9973 + 12345) % 170000) / 1000.0 - 85.0),
+        Some(((k * 7919 + 54321) % 360000) / 1000.0 - 180.0)))),
+    Fixture("two identical polygon rows", Seq(triangle, triangle, square),
+      points(for (i <- 0 to 26; k <- 0 to 33) yield (-1 + 0.5 * i, -1 + 0.75 * k))),
+    Fixture("null lat/lon probes", Seq(square, triangle), Seq(
+      (0L, None, Some(15.0)), (1L, Some(8.0), None), (2L, None, None),
+      (3L, Some(8.0), Some(15.0)), (4L, Some(2.0), Some(2.0)))))
 }

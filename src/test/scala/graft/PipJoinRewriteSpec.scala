@@ -67,4 +67,18 @@ class PipJoinRewriteSpec extends AnyFunSuite {
     assert(!physical.contains("BroadcastNestedLoopJoin"), physical)
     assert(joined.count() > 0)
   }
+
+  for (f <- SpatialJoinSpec.fixtures)
+    test(s"declarative join equals brute force, both side orders: ${f.name}") {
+      import spark.implicits._
+      GraftFunctions.register(spark)
+      val probes = f.probes(spark)
+      val polys = spark.createDataset(f.polys).toDF()
+      val pip = GraftFunctions.rayCastContains(polys("rings"), probes("lat"), probes("lon"))
+      for (joined <- Seq(probes.join(polys, pip), polys.join(probes, pip))) {
+        assert(joined.queryExecution.optimizedPlan.toString.contains("__graft_cover_cell"))
+        val got = joined.select("pid", "relation_id").as[(Long, Long)].collect().toSeq.sorted
+        assert(got === f.bruteForce)
+      }
+    }
 }

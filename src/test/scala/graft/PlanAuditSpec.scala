@@ -129,6 +129,19 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastNestedLoopJoin"), "PIP must not degenerate to NLJ")
   }
 
+  test("q12's cover-cell relation carries no rings column") {
+    // the relation that introduces the cover cell is the cell join's
+    // build side: rings attach once per polygon after the match, never
+    // once per cover cell
+    val plan = SparkEntry.queries("q12_pip_join")(spark, sf).queryExecution.optimizedPlan
+    def covers(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+      p.output.exists(_.name == "__graft_cover_cell")
+    val producers = plan.collect { case p if covers(p) && !p.children.exists(covers) => p }
+    assert(producers.nonEmpty, s"no cover cell in the q12 plan:\n$plan")
+    producers.foreach(p => assert(!p.output.exists(_.name == "rings"),
+      s"rings ride with the cover cells:\n$p"))
+  }
+
   test("image→assign→tile streaming phase has no exchange except the final count") {
     val imgs = graft.img.ImageTable.generate(spark, 200, 4).toDF()
       .withColumn("idx", substring(col("image_id"), 5, 9).cast("long"))
