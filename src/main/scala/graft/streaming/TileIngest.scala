@@ -1,11 +1,12 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import graft.geom.PolygonRow
+import graft.lineage.Lineage
+import graft.tile.{TileManifest, Tiling}
 
 /** Streaming image ingestion (north rule: readStream → transforms →
   * writeStream, checkpoint-resumable): new image+caption parquet files
@@ -29,33 +30,7 @@ object TileIngest {
     StructField("fmt", StringType), StructField("caption", StringType),
     StructField("phash", LongType)))
 
-  def committedBatches(outDir: String): Set[Long] = {
-    val dir = Paths.get(outDir, "_manifest")
-    if (!Files.isDirectory(dir)) Set.empty
-    else {
-      val s = Files.list(dir) // close the directory stream — fd leak otherwise
-      try {
-        val it = s.iterator()
-        val out = scala.collection.mutable.Set.empty[Long]
-        while (it.hasNext) {
-          val f = it.next().getFileName.toString
-          if (f.startsWith("stream-batch-") && f.endsWith(".json"))
-            out += f.stripPrefix("stream-batch-").stripSuffix(".json").toLong
-        }
-        out.toSet
-      } finally s.close()
-    }
-  }
-
-  private def commit(outDir: String, batchId: Long, images: Long, tiles: Long): Unit = {
-    val dir = Paths.get(outDir, "_manifest")
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s".stream-batch-$batchId.json.tmp")
-    Files.writeString(tmp,
-      s"""{"batch":$batchId,"images":$images,"tiles":$tiles,"schema_v":1}""")
-    Files.move(tmp, dir.resolve(s"stream-batch-$batchId.json"),
-      StandardCopyOption.ATOMIC_MOVE)
-  }
+  def committedBatches(outDir: String): Set[Long] = TileManifest.entries(outDir, "stream-batch-")
 
   /** Start the ingest. `Trigger.AvailableNow` drains what exists and stops —
     * the test/cron shape; pass a processing-time trigger for a daemon.
@@ -85,29 +60,27 @@ object TileIngest {
     assigned.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val ((nImages, nTiles), lineage) =
-          graft.lineage.Lineage.capture(spark, s"stream-batch-$batchId") {
-            val tiles = graft.tile.Tiling.tile(spark, df)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            val nT = tiles.count()
-            // image count from the persisted tiles (each image has exactly
-            // one level-0 origin tile) — counting from `df` would re-read
-            // the batch input and re-run both broadcast joins a second time
-            val nI = tiles.filter(t => t.level == 0 && t.tx == 0 && t.ty == 0).count()
-            tiles.write.mode("overwrite").parquet(s"$outDir/tiles/stream_batch=$batchId")
-            tiles.unpersist(blocking = false)
-            (nI, nT)
-          }
+      .foreachBatch { (df: DataFrame, batchId: Long) =>
+        // one write job: both counts ride it as observed metrics, as in
+        // TileManifest.tileBatches
+        val (m, lineage) = Lineage.capture(spark, s"stream-batch-$batchId") {
+          val obs = Observation(s"stream-batch-$batchId-${System.nanoTime()}")
+          Tiling.tile(spark, df).observe(obs, count(lit(1)).as("tiles"),
+            count(when(TileManifest.originTile, 1)).as("images"))
+            .write.mode("overwrite").parquet(s"$outDir/tiles/stream_batch=$batchId")
+          obs.get
+        }
         // batchId-keyed overwrite, mirroring the tiles path: an append here
         // would duplicate lineage rows when a batch is replayed after a
-        // crash between this write and commit() — tiles and manifest were
-        // idempotent under replay, lineage must be too. Partition column
-        // name is shared with TileManifest (see tileBatches there) so batch
-        // and streaming lineage can coexist under one _lineage root.
+        // crash between this write and the manifest commit — tiles and
+        // manifest were idempotent under replay, lineage must be too.
+        // Partition column name is shared with TileManifest (see tileBatches
+        // there) so batch and streaming lineage can coexist under one
+        // _lineage root.
         lineage.write.mode("overwrite")
           .parquet(s"$outDir/_lineage/lineage_batch=stream-$batchId")
-        commit(outDir, batchId, nImages, nTiles)
+        TileManifest.commit(outDir, "stream-batch-", batchId,
+          m("images").asInstanceOf[Long], m("tiles").asInstanceOf[Long])
         ()
       }
       .start()

@@ -3,6 +3,7 @@ package graft.tile
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.lineage.Lineage
 
 /** Checkpoint-resumable tiling job (north rule).
@@ -27,38 +28,43 @@ object TileManifest {
 
   final case class BatchResult(batch: Int, images: Long, tiles: Long, skipped: Boolean)
 
-  def completedBatches(outDir: String): Set[Int] = {
+  def completedBatches(outDir: String): Set[Int] = entries(outDir, "batch-").map(_.toInt)
+
+  /** The ids of the committed `outDir/_manifest/<prefix><id>.json` entries
+    * (TileIngest's micro-batches commit under the prefix `stream-batch-`).
+    */
+  private[graft] def entries(outDir: String, prefix: String): Set[Long] = {
     val dir = Paths.get(outDir, "_manifest")
     if (!Files.isDirectory(dir)) Set.empty
     else {
       val s = Files.list(dir) // close the directory stream — fd leak otherwise
-      try {
-        val it = s.iterator()
-        val out = scala.collection.mutable.Set.empty[Int]
-        while (it.hasNext) {
-          val f = it.next().getFileName.toString
-          if (f.startsWith("batch-") && f.endsWith(".json"))
-            out += f.stripPrefix("batch-").stripSuffix(".json").toInt
-        }
-        out.toSet
-      } finally s.close()
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(f => f.startsWith(prefix) && f.endsWith(".json"))
+        .map(_.stripPrefix(prefix).stripSuffix(".json").toLong).toSet
+      finally s.close()
     }
   }
 
-  private def commitManifest(outDir: String, batch: Int, images: Long, tiles: Long): Unit = {
+  /** Commit the entry `outDir/_manifest/<prefix><id>.json` atomically
+    * (temp file + rename); a refresh or a replay replaces an existing entry.
+    */
+  private[graft] def commit(outDir: String, prefix: String, id: Long, images: Long,
+      tiles: Long): Unit = {
     val dir = Paths.get(outDir, "_manifest")
     Files.createDirectories(dir)
-    val tmp = dir.resolve(s".batch-$batch.json.tmp")
-    val fin = dir.resolve(s"batch-$batch.json")
-    Files.writeString(tmp,
-      s"""{"batch":$batch,"images":$images,"tiles":$tiles,"schema_v":1}""")
-    // REPLACE: a refresh re-commits an existing batch's entry
-    Files.move(tmp, fin, StandardCopyOption.ATOMIC_MOVE,
+    val tmp = dir.resolve(s".$prefix$id.json.tmp")
+    Files.writeString(tmp, s"""{"batch":$id,"images":$images,"tiles":$tiles,"schema_v":1}""")
+    Files.move(tmp, dir.resolve(s"$prefix$id.json"), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Deterministic batch of an image: the same split at any cluster size. */
   private def batchCol(nBatches: Int) = pmod(hash(col("image_id")), lit(nBatches))
+
+  /** A tile's level-0 origin: each image has exactly one, so counting
+    * these counts the images tiled.
+    */
+  private[graft] def originTile = col("level") === 0 && col("tx") === 0 && col("ty") === 0
 
   /** Run (or resume) the tiling job. `assigned` needs image_id, relation_id,
     * bytes. Returns per-batch results including skips.
@@ -91,10 +97,9 @@ object TileManifest {
       nBatches: Int, pending: Seq[Int]): Seq[BatchResult] = {
     if (pending.isEmpty) return (0 until nBatches).map(BatchResult(_, 0, 0, skipped = true))
     val ids = pending.mkString("-")
-    val origin = col("level") === 0 && col("tx") === 0 && col("ty") === 0
     val counts = pending.flatMap { b =>
       val in = col("batch") === b
-      Seq(count(when(in, 1)).as(s"tiles_$b"), count(when(in && origin, 1)).as(s"images_$b"))
+      Seq(count(when(in, 1)).as(s"tiles_$b"), count(when(in && originTile, 1)).as(s"images_$b"))
     }
     val (m, lineage) = Lineage.capture(spark, s"tile-batches-$ids") {
       val obs = Observation(s"tile-batches-$ids-${System.nanoTime()}")
@@ -117,7 +122,7 @@ object TileManifest {
         val tiles = m(s"tiles_$b").asInstanceOf[Long]
         val images = m(s"images_$b").asInstanceOf[Long]
         if (tiles == 0) rmrf(new java.io.File(s"$outDir/tiles/batch=$b"))
-        commitManifest(outDir, b, images, tiles)
+        commit(outDir, "batch-", b, images, tiles)
         BatchResult(b, images, tiles, skipped = false)
       }
     }

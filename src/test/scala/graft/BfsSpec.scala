@@ -1,13 +1,11 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.forAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.graph.Bfs
+import graft.lineage.Lineage
 
 /** Bfs: hand-derived hop counts, multi-seed minimum, unreachable nodes
   * absent, loud non-convergence — on both paths of `Bfs.hops`: the
@@ -130,31 +128,11 @@ object BfsSpec {
     */
   lazy val blocked: SparkSession = SparkTestSession.broadcastOff
 
-  private val scopeKey = "graft.test.bfs.scope"
-  private val scopes = new AtomicInteger()
-
   /** `body`'s result and the number of Spark jobs it started on this
-    * thread (jobs of other threads carry another scope, or none).
+    * thread (jobs of other threads are not in its [[Lineage.scope]]).
     */
-  def jobsOf[A](spark: SparkSession)(body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val scope = scopes.incrementAndGet().toString
-    val n = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty(scopeKey) == scope)) n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setLocalProperty(scopeKey, scope)
-    try {
-      val a = body
-      ListenerBusDrain.waitUntilEmpty(sc, 10000L)
-      (a, n.get())
-    } finally {
-      sc.setLocalProperty(scopeKey, null)
-      sc.removeSparkListener(l)
-    }
-  }
+  def jobsOf[A](spark: SparkSession)(body: => A): (A, Int) =
+    Lineage.scope(spark)(body) match { case (a, s) => (a, s.jobs) }
 }
 
 /** Both paths of `Bfs.hops` over random small graphs with duplicate

@@ -188,25 +188,8 @@ class PlanAuditSpec extends AnyFunSuite {
   /** Counts Spark jobs triggered while `body` runs — the driver-round
     * overhead audit for the iterative/setup-heavy operators.
     */
-  private def countJobs[A](body: => A): (A, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val a = body
-      // listener bus is async — wait for quiescence before reading
-      var last = -1; var stable = 0; var waited = 0
-      while (stable < 2 && waited < 3000) {
-        val c = n.get()
-        if (c == last) stable += 1 else { stable = 0; last = c }
-        Thread.sleep(50); waited += 50
-      }
-      (a, n.get())
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
+  private def countJobs[A](body: => A): (A, Int) =
+    graft.lineage.Lineage.scope(spark)(body) match { case (a, s) => (a, s.jobs) }
 
   test("minhashPairs shuffles exactly twice: bucket groupBy + pair-dedup agg") {
     // the r2 regression was a THIRD exchange (a standalone pair distinct());
