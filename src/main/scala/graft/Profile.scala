@@ -14,9 +14,9 @@ import graft.lineage.Lineage
 /** Profiling main: per query and rep, build/plan/exec seconds, rows and
   * the counters of one [[Lineage.scope]] over all three phases (iterative
   * queries loop while they are built); `headline` adds the headline job's
-  * phases, one scope each. Every rep starts on an empty cache. A query that
-  * throws becomes an `error` entry and exit status 1. With `planDir`, rep 1
-  * writes `explain("formatted")` to `<q>.txt`. Host state: nproc, 1-min load.
+  * phases, one scope each. A query that throws becomes an `error` entry
+  * and exit status 1. With `planDir`, rep 1 writes `explain("formatted")`
+  * to `<q>.txt`. Host state: nproc, 1-min load.
   *
   * Usage: `runMain graft.Profile <out.json> <q1,q2,...|headline> [sfDir] [reps] [planDir]`.
   */
@@ -56,7 +56,6 @@ object Profile {
     names.flatMap {
       case "headline" => headline(spark, reps)
       case q => (1 to reps).map { rep =>
-        spark.catalog.clearCache()
         attempt(q, rep) {
           val ((df, rows, secs), s) = Lineage.scope(spark) {
             val (df, build) = timed(SparkEntry.queries(q)(spark, sfDir))
@@ -80,7 +79,6 @@ object Profile {
     val parts = spark.sparkContext.defaultParallelism
     Bench.spatialTileJob(spark, 500, parts) // warm-up
     (1 to reps).flatMap { rep =>
-      spark.catalog.clearCache()
       def phase(name: String)(rows: => Long) = attempt(s"headline.$name", rep) {
         val ((n, sec), s) = Lineage.scope(spark)(timed(rows))
         ListMap("s" -> sec) ++ counters(n, s)

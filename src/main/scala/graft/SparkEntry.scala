@@ -196,7 +196,7 @@ object SparkEntry {
     * the ×4-scaled fixtures; the lattice/ray-cast chain is identical).
     */
   private def rasterCellsSqlOver(edgesSqlValues: String, tail: String,
-      extraCte: Boolean = false): String =
+      extraCte: Boolean): String =
     s"""WITH ${insideCtes("", edgesSqlValues)}${if (extraCte) "," else ""}
        |$tail""".stripMargin
 
@@ -782,7 +782,6 @@ object SparkEntry {
     // the window's signed MIN VALUE, so the rightmost-position rule never
     // affects the fingerprint set).
     "q29_fingerprint" -> ((s, dir) => {
-      import s.implicits._
       val fps = table(s, dir, "documents").select(
         col("doc_id").cast("long").as("doc_id"),
         explode(graft.text.TextExpr.winnowCol(s, col("text"))).as("fp"))
@@ -989,7 +988,6 @@ object SparkEntry {
     // scanned once; the eval gram set is benchmark-sized → broadcast
     // semi-join; one distinct + one groupBy exchange for per-doc counts.
     "q67_decontaminate" -> ((s, dir) => {
-      import s.implicits._
       val n = 13
       def grams(df: DataFrame): DataFrame = df
         .select(col("doc_id"),
@@ -1220,7 +1218,6 @@ object SparkEntry {
     // DETERMINISTIC here (splitmix64 probes), so the oracle reproduces the
     // exact same bitset and the exact same verdicts, FPs included.
     "q81_bloom_decontam" -> ((s, dir) => {
-      import s.implicits._
       val n = 13
       def gramKeys(df: DataFrame): DataFrame = df
         .select(col("doc_id"),
@@ -2797,7 +2794,7 @@ object SparkEntry {
       val maxDay = per.agg(max(col("last_day")).as("mx"))
       val scored = per.crossJoin(broadcast(maxDay))
         .withColumn("recency", col("mx") - col("last_day"))
-        .persist()
+        .localCheckpoint(false)
       def cuts(axis: String): DataFrame = {
         val hist = scored.groupBy(col(axis).as("v"))
           .agg(count(lit(1)).as("c"))
@@ -3231,7 +3228,7 @@ object SparkEntry {
         .select(col("vec_id"), col("label").cast("long").as("label"))
       val cont = mutualKnnClusters(s, dir).join(e, Seq("vec_id"))
         .groupBy(col("cluster"), col("label")).agg(count(lit(1)).as("m"))
-        .persist()
+        .localCheckpoint(false)
       def pairs2(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
         sum(c * (c - 1L)).cast("long")
       val a = cont.agg(pairs2(col("m")).as("a2"),
@@ -3279,7 +3276,7 @@ object SparkEntry {
       val conf = graft.text.TextOps.withLang(s, table(s, dir, "documents"))
         .groupBy(col("lang"), col("predicted_lang"))
         .agg(count(lit(1)).as("n"))
-        .persist()
+        .localCheckpoint(false)
       val tot = conf.agg(sum(col("n")).as("nn"),
         sum(when(col("lang") === col("predicted_lang"), col("n"))
           .otherwise(0L)).as("o"))
@@ -4029,7 +4026,6 @@ object SparkEntry {
     // q40's keeper-selection shape; oracled by extending the recursive-CTE
     // reachability fixpoint with the keeper anti-join.
     "q53_fuzzy_select" -> ((s, dir) => {
-      import s.implicits._
       val docs0 = table(s, dir, "documents").filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), col("text"))
       def tier(k: Int, suffix: String) = docs0.select(

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * occupied-cell graph (grid-sized, via
   * [[graft.dedup.Dedup.connectedComponents]]); the per-cluster stats are one groupBy each. The corpus is
   * scanned exactly twice (cell assignment feeds both the occupied set
-  * and the final point count — persisted between them) and never joins
+  * and the final point count — cut once between them) and never joins
   * itself.
   */
 object GridCluster {
@@ -30,9 +30,8 @@ object GridCluster {
   def clusters(spark: SparkSession, points: DataFrame, res: Int): DataFrame = {
     val withCell = points.select(
         graft.functions.GraftFunctions.cellOfCol(col("lat"), col("lon"), res).as("cell"))
-      // scanned twice (occupied set + final count); ContextCleaner
-      // releases it once the result frame is unreachable
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // scanned twice (occupied set + final count): cut, not cached
+      .localCheckpoint(false)
     val occ = withCell.distinct()
     // ring includes the (0,0) offset → a self-edge per occupied cell, so
     // isolated cells stay known to the component search

@@ -53,12 +53,11 @@ object Containment {
     import spark.implicits._
     require(num >= 0 && den > 0 && num <= den, s"threshold $num/$den")
     require(maxBucket >= 2, s"maxBucket=$maxBucket")
-    // persisted: referenced twice (sizes + buckets) — without it the
-    // corpus would shingle twice; released by the ContextCleaner once
-    // the returned frame is unreachable (same policy as Dedup's rounds)
+    // cut once: referenced twice (sizes + buckets) — without it the
+    // corpus would shingle twice
     val sh = shingles(docs.select(col(idCol).cast("long").as(idCol), col(textCol)),
         n, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
     val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("nsh"))
     // in-bucket pair explode: ids sorted so (a, b) emits once with a < b
     val pairs = sh.groupBy(col("sh"))

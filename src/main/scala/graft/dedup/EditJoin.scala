@@ -47,8 +47,6 @@ object EditJoin {
 
     // index side: the k+1 partition segments of every string.
     // 0-based start of segment j of an L-length string: j*L div (k+1).
-    val segStart = expr(s"j * length(s) div $parts")
-    val segEnd = expr(s"(j + 1) * length(s) div $parts")
     val idx = base
       .select(col("id").as("sa"), col("s").as("stra"),
         explode(sequence(lit(0), lit(parts - 1))).as("j"))

@@ -15,23 +15,20 @@ import org.apache.spark.sql.functions._
   * shingles.
   *
   * Scale shape — the global sliding window WITHOUT a global sort:
-  *  1. ONE range exchange on (key, id) — Spark's sampled range
+  *  1. ONE range exchange on (key, id, text) — Spark's sampled range
   *     partitioner, the same exchange a distributed sort-merge uses;
-  *  2. global ranks from per-partition `row_number` plus driver-cumsum
-  *     partition offsets (the partition-count aggregate is
-  *     metadata-sized — one long per partition; the same
-  *     offsets-as-literals idiom as [[graft.text.TextOps.packShards]]);
+  *  2. global ranks from per-partition `row_number` plus partition
+  *     offsets, the prefix sums of the per-partition counts (one row per
+  *     partition), computed in the same plan;
   *  3. in-window pairs as an EQUI-JOIN on rank (each row joined to
   *     ranks +1..+w−1) — cross-partition neighbor pairs fall out of the
   *     join with no boundary special-casing, because ranks are global;
   *  4. `levenshtein` (codegen'd built-in) verifies pairs only —
   *     O(w·N) verifications, never O(N²).
   *
-  * The range-partitioned frame is persisted so the partition-id stamp
-  * is computed ONCE (a re-evaluated sampled range exchange could place
-  * boundary rows differently between the counts job and the rank job);
-  * released by the ContextCleaner when the result frame goes
-  * unreachable.
+  * The offsets and the ranks read the one range exchange of one plan, so
+  * the partition-id stamp is computed ONCE (a re-evaluated sampled range
+  * exchange could place boundary rows differently between two jobs).
   */
 object Snm {
 
@@ -52,17 +49,22 @@ object Snm {
     require(maxDist >= 0, s"maxDist=$maxDist")
     val np = if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
+    // txt is the last range key: it only breaks (k, id) ties, and as a
+    // partitioning key it can never be pruned below the exchange, so every
+    // reader of `pidded` plans the same exchange input and Spark runs the
+    // one range exchange once
     val pidded = docs
       .select(col(idCol).cast("long").as("id"), col(textCol).as("txt"), key.as("k"))
-      .repartitionByRange(np, col("k"), col("id"))
+      .repartitionByRange(np, col("k"), col("id"), col("txt"))
       .withColumn("pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cnts = pidded.groupBy(col("pid")).count()
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offsets = cnts.map { case (p, c) => val o = (p, acc); acc += c; o }
-    val offDf = spark.createDataFrame(offsets.toSeq).toDF("pid", "off")
-    val wLoc = Window.partitionBy(col("pid")).orderBy(col("k"), col("id"))
+    // partition offsets (exclusive prefix sums of the per-partition counts)
+    // in the same plan as the ranks, so both see one partitioning even where
+    // a re-run sampled range exchange would draw other bounds
+    val cnts = pidded.groupBy(col("pid")).agg(count(lit(1)).as("c"))
+    val offDf = cnts.select(col("pid"))
+      .join(cnts.select(col("pid").as("p2"), col("c")), col("p2") < col("pid"), "left")
+      .groupBy(col("pid")).agg(coalesce(sum(col("c")), lit(0L)).as("off"))
+    val wLoc = Window.partitionBy(col("pid")).orderBy(col("k"), col("id"), col("txt"))
     val ranked = pidded.join(broadcast(offDf), Seq("pid"))
       .withColumn("rk", col("off") + row_number().over(wLoc))
       .select(col("id"), col("txt"), col("rk"))

@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   * pathological all-one-cluster input degrades to star contraction
   * instead of driver collapse); border attachment is one join + min
   * aggregation over the already-materialized pairs. The corpus is
-  * scanned once into the binned frame and once for the final role
-  * join — `points` is persisted across the two.
+  * scanned once into the binned frame and again for the core and final
+  * role joins; the pairs are cut once with a lazy local checkpoint.
   */
 object Dbscan {
 
@@ -42,11 +42,9 @@ object Dbscan {
     require(minPts >= 1, s"minPts=$minPts must be >= 1")
     val pts = points.select(col("id").cast("long").as("id"),
         col("x").cast("long").as("x"), col("y").cast("long").as("y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // unordered eps-pairs, each exactly once (rel_a < rel_b); persisted —
+    // unordered eps-pairs, each exactly once (rel_a < rel_b); cut once —
     // they feed degrees, the core-core edge list, and border attachment
-    val pairs = PointPattern.distanceBand(pts, eps2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pairs = PointPattern.distanceBand(pts, eps2).localCheckpoint(false)
     val deg = pairs.select(col("rel_a").as("id"))
       .union(pairs.select(col("rel_b").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("nbrs"))
@@ -54,7 +52,6 @@ object Dbscan {
     val core = pts.join(deg, Seq("id"), "left")
       .filter(coalesce(col("nbrs"), lit(0L)) + 1L >= minPts)
       .select(col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val coreEdges = pairs
       .join(core.select(col("id").as("rel_a")), Seq("rel_a"), "left_semi")
       .join(core.select(col("id").as("rel_b")), Seq("rel_b"), "left_semi")

@@ -134,7 +134,6 @@ object Hull extends Serializable {
         .otherwise(raise_error(concat(lit("orientedMbr: |y| > 2^14: "),
           col("y").cast("string")))).as("y"))
     val hull = extremePoints(spark, checked, nSalt)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nh = hull.groupBy(col("grp")).agg(count(lit(1)).as("n_hull"))
     val a = hull.select(col("grp"), col("x").as("ax"), col("y").as("ay"))
     val b = hull.select(col("grp"), col("x").as("bx"), col("y").as("by"))
@@ -170,7 +169,6 @@ object Hull extends Serializable {
   def diameter2(spark: SparkSession, points: DataFrame,
       nSalt: Int = 16): DataFrame = {
     val hull = extremePoints(spark, points, nSalt)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val a = hull.select(col("grp"), col("x").as("x1"), col("y").as("y1"))
     val b = hull.select(col("grp"), col("x").as("x2"), col("y").as("y2"))
     val pairs = a.join(b, Seq("grp"))

@@ -98,14 +98,13 @@ object PointPattern {
     pairsWithinBinned(points, cell, d2)._1
 
   /** The pair pipeline plus the shared binned frame it was built on —
-    * binned ONCE and persisted (it feeds the build side, the probe side,
-    * and, in [[ripleyK]], the global count; unpersisted, the whole
-    * upstream scan would run three times — the KCore.scala lesson).
+    * binned ONCE and cut with a lazy local checkpoint (it feeds the build
+    * side, the probe side and, in [[ripleyK]], the global count; uncut,
+    * the upstream scan would run three times).
     */
   private def pairsWithinBinned(points: DataFrame, cell: Long,
       d2: Long): (DataFrame, DataFrame) = {
-    val b = binned(points, cell)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val b = binned(points, cell).localCheckpoint(false)
     val build = b
       .select(col("id").as("id_b"), col("x").as("xb"), col("y").as("yb"),
         col("cx"), col("cy"))

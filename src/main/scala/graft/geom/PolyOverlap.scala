@@ -51,7 +51,7 @@ object PolyOverlap {
     // twice (measured: ReuseExchange does NOT canonicalize the two aliased
     // typed-flatMap subtrees together). The candidate pairs — the bounded
     // stage output — are materialized eagerly so the big cover cache can
-    // be RELEASED before returning; only pair-sized blocks stay cached.
+    // be RELEASED before returning; the pairs are a local checkpoint.
     val cells = polys.flatMap(p =>
       CellIndex.cover(p.rings, res, maxCells).map(c => (c, p.relation_id)))
       .toDF("cell", "id")
@@ -62,8 +62,7 @@ object PolyOverlap {
       .select(col("id_a"), col("id_b"))
       .distinct()
       .observe("graft_poly_overlap", count(lit(1)).as("candidate_pairs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cand.count(): Unit // fills the pair cache (one extra bounded action)
+      .localCheckpoint(true)
     cells.unpersist()
     val ringsDf = broadcast(polys.map(p => (p.relation_id, p.rings)).toDF("rid", "rings"))
     cand

@@ -184,11 +184,10 @@ object Raster {
     */
   def arealInterp(srcCells: DataFrame, dstCells: DataFrame, values: DataFrame,
       srcId: String = "src_id", dstId: String = "dst_id"): DataFrame = {
-    // src feeds both the size aggregation and the overlap join —
-    // persisted so the upstream burn (a bbox-lattice explode + ray-cast
-    // filter when it comes from rasterize) runs once, not twice
-    val src = srcCells.select(col(srcId), col("cx"), col("cy"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // src feeds both the size aggregation and the overlap join — cut
+    // once so the upstream burn (a bbox-lattice explode + ray-cast filter
+    // when it comes from rasterize) runs once, not twice
+    val src = srcCells.select(col(srcId), col("cx"), col("cy")).localCheckpoint(false)
     val dst = broadcast(dstCells.select(col(dstId), col("cx"), col("cy")))
     val srcSz = src.groupBy(col(srcId)).agg(count(lit(1)).as("src_cells"))
     src.join(dst, Seq("cx", "cy"))
@@ -217,11 +216,11 @@ object Raster {
     * (polygon, cell), uniform unless one polygon dominates.
     */
   def focalStats(cells: DataFrame, idCol: String = "relation_id"): DataFrame = {
-    // occ feeds the scatter AND the join-back — persisted so the burn
-    // upstream runs once (the KCore.scala lesson)
+    // occ feeds the scatter AND the join-back — cut once so the burn
+    // upstream runs once
     val occ = cells.select(col(idCol), col("cx"), col("cy"),
         col("v").cast("long").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
     val offsets = for { dx <- -1 to 1; dy <- -1 to 1; if dx != 0 || dy != 0 }
       yield (dx, dy)
     val scattered = occ.select(col(idCol), col("v"),
@@ -250,7 +249,7 @@ object Raster {
   def focalMode(cells: DataFrame, idCol: String = "relation_id"): DataFrame = {
     val occ = cells.select(col(idCol), col("cx").cast("long").as("cx"),
         col("cy").cast("long").as("cy"), col("class").cast("long").as("class"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
     val offsets = for { dx <- -1 to 1; dy <- -1 to 1 } yield (dx, dy)
     val scattered = occ.select(col(idCol), col("class"),
         explode(array(offsets.map { case (dx, dy) =>
@@ -416,7 +415,7 @@ object Raster {
   def borderWeights(cells: DataFrame, idCol: String = "relation_id"): DataFrame = {
     val occ = cells.select(col(idCol), col("cx").cast("long").as("cx"),
         col("cy").cast("long").as("cy"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
     val offsets = Seq((-1, 0), (1, 0), (0, -1), (0, 1))
     val scattered = occ.select(col(idCol).as("rel_a"),
         explode(array(offsets.map { case (dx, dy) =>

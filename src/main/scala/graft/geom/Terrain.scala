@@ -1,9 +1,8 @@
 package graft.geom
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Terrain analysis over an integer elevation cell raster (idCol, cx, cy,
   * z) — the DEM layer of the map-algebra stack: Horn slope/aspect, D8
@@ -29,8 +28,6 @@ object Terrain {
     */
   val Dirs: IndexedSeq[(Int, Int)] =
     IndexedSeq((1, 0), (1, 1), (0, 1), (-1, 1), (-1, 0), (-1, -1), (0, -1), (1, -1))
-
-  private val Lvl = StorageLevel.MEMORY_AND_DISK
 
   private def key(idCol: String) = Seq(idCol, "cx", "cy")
 
@@ -231,7 +228,6 @@ object Terrain {
       .withColumn("d", greatest(abs(col("dx")), abs(col("dy"))))
       .withColumn("rz", col("z") - col("oz"))
       .select(col(idCol), col("ray"), col("cx"), col("cy"), col("d"), col("rz"))
-      .persist(Lvl)
     val blockers = rays.select(col(idCol), col("ray"), col("d").as("bd"),
       col("rz").as("brz"))
     val vis = rays.alias("c")

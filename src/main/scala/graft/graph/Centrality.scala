@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Exact path-based centralities over bounded communities — the metrics
   * a link-graph curation pipeline ranks crawl seeds and prunes
@@ -74,13 +73,12 @@ object Centrality {
     */
   def bridges(spark: SparkSession, edges: DataFrame,
       maxRounds: Int = 256): DataFrame = {
-    val lvl = StorageLevel.MEMORY_AND_DISK
     val und = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
-      .persist(lvl)
+      .localCheckpoint(false)
     val dir = und.select(col("a").as("src"), col("b").as("dst"))
       .union(und.select(col("b").as("src"), col("a").as("dst")))
     // blocked round fusion (Fixpoint): self-edges carry the
@@ -141,18 +139,19 @@ object Centrality {
     */
   def articulation(spark: SparkSession, edges: DataFrame,
       maxRounds: Int = 256): DataFrame = {
-    val lvl = StorageLevel.MEMORY_AND_DISK
     val und = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
+    // dir feeds deg and the loop's edge view; deg feeds the seeds and the
+    // returned frame, so both are cut, not cached
     val dir = und.select(col("a").as("s"), col("b").as("d"))
       .union(und.select(col("b").as("s"), col("a").as("d")))
-      .persist(lvl)
+      .localCheckpoint(false)
     val deg = dir.groupBy(col("s").as("v"))
       .agg(count(lit(1)).as("degree"), min(col("d")).as("seed"))
-      .persist(lvl)
+      .localCheckpoint(false)
     val removalSeeds = deg.filter(col("degree") >= 2L)
       .select(col("v"), lit(0L).as("kind"), col("seed").as("id"))
     val coverSeeds = deg.select(col("v"), lit(1L).as("kind"),
@@ -187,8 +186,6 @@ object Centrality {
         when(col("degree") >= 2L &&
           coalesce(col("reached"), lit(0L)) < col("comp_size") - 1L, 1L)
           .otherwise(0L).as("is_articulation"))
-    dir.unpersist()
-    deg.unpersist()
     out
   }
 
@@ -217,7 +214,6 @@ object Centrality {
       .select(col("la").as("label"), col("a"), col("b"))
     val dirE = intra.select(col("label"), col("a").as("s"), col("b").as("d"))
       .union(intra.select(col("label"), col("b").as("s"), col("a").as("d")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val deg = dirE.groupBy(col("label"), col("s").as("n"))
       .agg(count(lit(1)).as("deg"))
     val withDegs = dirE
@@ -258,14 +254,12 @@ object Centrality {
       edges: DataFrame): DataFrame = {
     val lab = labels.select(col("id").cast("long").as("id"),
       col("label").cast("long").as("label"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val und = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val m = und.agg(count(lit(1)).as("m"))
     val el = und
       .join(lab.select(col("id").as("a"), col("label").as("la")), Seq("a"))

@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Synchronous majority-vote label propagation (Raghavan, Albert,
   * Kumara 2007) — community detection, DISTINCT from connected

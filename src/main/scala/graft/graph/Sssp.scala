@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import scala.util.chaining._
 
 /** Multi-source single-source-shortest-path over a weighted undirected

@@ -35,9 +35,8 @@ object Triangles {
         greatest(col("src"), col("dst")).cast("long").as("hi"))
       .filter(col("lo") =!= col("hi"))
       .distinct()
-      // referenced three times (degrees + orientation + closing edges);
-      // released by the ContextCleaner once the result is unreachable
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // referenced three times (degrees + orientation + closing edges)
+      .localCheckpoint(false)
     val deg = canon.select(col("lo").as("id"))
       .union(canon.select(col("hi").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
@@ -51,7 +50,6 @@ object Triangles {
         when(rlo < rhi, col("lo")).otherwise(col("hi")).as("u"),
         when(rlo < rhi, col("hi")).otherwise(col("lo")).as("v"),
         when(rlo < rhi, rhi).otherwise(rlo).as("rv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ea = orient.select(col("u"), col("v").as("y"), col("rv").as("ry"))
     val eb = orient.select(col("u"), col("v").as("z"), col("rv").as("rz"))
     val wedges = ea.join(eb, Seq("u")).filter(col("ry") < col("rz"))

@@ -30,18 +30,6 @@ object Codecs {
 
   private val PngSig = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A)
 
-  private def writeChunk(out: java.io.ByteArrayOutputStream, tag: String, body: Array[Byte]): Unit = {
-    def be(i: Int): Array[Byte] =
-      Array((i >>> 24).toByte, (i >>> 16).toByte, (i >>> 8).toByte, i.toByte)
-    out.write(be(body.length))
-    val tagB = tag.getBytes("US-ASCII")
-    out.write(tagB)
-    out.write(body)
-    val crc = new CRC32()
-    crc.update(tagB); crc.update(body)
-    out.write(be(crc.getValue.toInt))
-  }
-
   // per-thread scratch for PNG scanline assembly (hot tile path — avoids a
   // raw-buffer allocation per encode; grown on demand, max 64×64 RGB here)
   private val scanScratch = ThreadLocal.withInitial[Array[Byte]](() => new Array[Byte](16 * 1024))

@@ -1,7 +1,6 @@
 package graft.img
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Multimodal columns beyond images (driver prompt): audio/video ride as
   * opaque `binary` columns with typed metadata.

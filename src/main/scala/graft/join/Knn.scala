@@ -116,8 +116,7 @@ object Knn {
       .select(col(idCol), col("nid"), col("rank"), col("dist"))
     val out = (resultParts :+ brute).reduce(_.unionAll(_))
     // materialize the final result before releasing cached inputs
-    val result = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count()
+    val result = out.localCheckpoint(true)
     toUnpersist.foreach(_.unpersist(blocking = false))
     result
   }

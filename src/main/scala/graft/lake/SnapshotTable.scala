@@ -145,7 +145,7 @@ object SnapshotTable {
   }
 
   private def writeManifest(dir: String, m: Manifest,
-      knownParentTs: Long = -1L): Unit = {
+      knownParentTs: Long): Unit = {
     Files.createDirectories(metaDir(dir))
     val fs = m.files.sortBy(_.path)
       .map { f =>

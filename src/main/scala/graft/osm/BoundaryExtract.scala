@@ -124,14 +124,12 @@ object BoundaryExtract {
     import spark.implicits._
 
     // rels feeds two subtrees (member explode + the final tags join) and
-    // members feeds the sizing count + the ways join: persist both so a
-    // recompute-heavy source (e.g. a PBF decode) pays one relations pass,
-    // not three. Both are post-filter boundary-sized (tiny); LRU handles
-    // eviction if a caller loops extract.
-    val rels = filterAdminRelations(relations, minAdmin, maxAdmin)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val members = memberWays(rels)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // members feeds the sizing count + the ways join: lazy local
+    // checkpoints, so a recompute-heavy source (e.g. a PBF decode) pays one
+    // relations pass, not three, and the session's cache stays untouched.
+    // Both are post-filter boundary-sized (tiny).
+    val rels = filterAdminRelations(relations, minAdmin, maxAdmin).localCheckpoint(false)
+    val members = memberWays(rels).localCheckpoint(false)
     val (bcastMembers, bcastSegs) = broadcastDecision(members, maxBroadcastMembers)
 
     // J1+J3: big `ways` streams against the (broadcast when small) member
@@ -389,24 +387,22 @@ object BoundaryExtract {
     * spatial lag Σ_{j∈N(i)} x_j (isolated polygons keep degree 0, lag 0).
     *
     * Scale shape: `values` is polygon-count-sized and `adjacency` is
-    * pair-sized — both persisted here because each feeds 2–3 consumers
-    * (the KCore.scala lesson: an unpersisted frame re-runs its whole
-    * upstream per consumer, and adjacency's upstream is ring assembly).
+    * pair-sized. `values` feeds four consumers, so it is cut once with a
+    * lazy local checkpoint: its upstream (ring assembly) runs once and no
+    * cache outlives the call. `adjacency` ends in an aggregation, whose
+    * exchange the plan's three edge consumers reuse, so it is not cut.
     * All joins are hash equi-joins on relation id; the three global
     * aggregates are 1-row frames broadcast back. No window, no sort.
     */
   def spatialLag(values: DataFrame, adjacency: DataFrame): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val vals = values.select(col("relation_id"), col("x").cast("long").as("x"))
-      .persist(lvl)
+      .localCheckpoint(false)
     val und = adjacency.select(col("rel_a").as("src"), col("rel_b").as("dst"))
     val dir = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
-      .persist(lvl)
     val g = vals.agg(count(lit(1)).as("n"), sum(col("x")).as("s"))
     val c = vals.crossJoin(broadcast(g))
       .select(col("relation_id"), col("x"), col("n"),
         (col("n") * col("x") - col("s")).as("c"))
-      .persist(lvl)
     val lagged = dir
       .join(vals.select(col("relation_id").as("dst_id"), col("x").as("x_dst")),
         col("dst") === col("dst_id"))
@@ -444,13 +440,12 @@ object BoundaryExtract {
     *
     * Scale shape: one hash join values→lag aggregation (edge-sized), one
     * left join back (polygon-sized), the global (n, S) as a 1-row
-    * broadcast. No window, no sort; [[spatialLag]]'s persist rationale
+    * broadcast. No window, no sort; [[spatialLag]]'s checkpoint rationale
     * applies to `vals` (it feeds the lag join and the re-attach).
     */
   def localMoran(values: DataFrame, adjacency: DataFrame): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val vals = values.select(col("relation_id"), col("x").cast("long").as("x"))
-      .persist(lvl)
+      .localCheckpoint(false)
     val und = adjacency.select(col("rel_a").as("src"), col("rel_b").as("dst"))
     val dir = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
     val g = vals.agg(count(lit(1)).as("n"), sum(col("x")).as("s"))
@@ -497,9 +492,8 @@ object BoundaryExtract {
     * a 1-row broadcast. No window, no sort.
     */
   def localG(values: DataFrame, adjacency: DataFrame): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val vals = values.select(col("relation_id"), col("x").cast("long").as("x"))
-      .persist(lvl)
+      .localCheckpoint(false)
     val und = adjacency.select(col("rel_a").as("src"), col("rel_b").as("dst"))
     val dir = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
     val g = vals.agg(count(lit(1)).as("n"), sum(col("x")).as("s"))
@@ -543,7 +537,7 @@ object BoundaryExtract {
     */
   def globalAutocorr(values: DataFrame, adjacency: DataFrame): DataFrame = {
     val vals = values.select(col("relation_id"), col("x").cast("long").as("x"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
     val und = adjacency.select(col("rel_a").as("src"), col("rel_b").as("dst"))
     val dir = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
     val g = vals.agg(count(lit(1)).as("n"), sum(col("x")).as("s"),
@@ -585,13 +579,12 @@ object BoundaryExtract {
     *
     * Scale shape: two polygon-sized hash joins attach b to each edge
     * endpoint, ONE edge-sized aggregation, and the polygon-global (n, nB)
-    * as a 1-row broadcast. No window, no sort. `values` is persisted —
-    * it feeds both the edge join and the global count.
+    * as a 1-row broadcast. No window, no sort. `values` is cut with a lazy
+    * local checkpoint — it feeds both the edge join and the global count.
     */
   def joinCounts(values: DataFrame, adjacency: DataFrame): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val vals = values.select(col("relation_id"), col("b").cast("long").as("b"))
-      .persist(lvl)
+      .localCheckpoint(false)
     val e = adjacency.select(col("rel_a"), col("rel_b"))
       .join(vals.select(col("relation_id").as("rel_a"), col("b").as("b_a")), "rel_a")
       .join(vals.select(col("relation_id").as("rel_b"), col("b").as("b_b")), "rel_b")
@@ -635,7 +628,6 @@ object BoundaryExtract {
   def dissolve(spark: SparkSession, values: DataFrame, adjacency: DataFrame,
       stats: DataFrame): DataFrame = {
     val vals = values.select(col("relation_id"), col("g").cast("long").as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val same = adjacency
       .join(vals.select(col("relation_id").as("rel_a"), col("g").as("g_a")), "rel_a")
       .join(vals.select(col("relation_id").as("rel_b"), col("g").as("g_b")), "rel_b")

@@ -23,12 +23,13 @@ import org.apache.spark.sql.types._
   * [[graft.functions.CosineF32]] recipe), with the codebooks decoded once
   * per plan from literal children — not per row, not per element.
   *
-  * FP parity: every loop replicates the driver-side scalar kernels in
-  * [[Similarity]] (`nearestCidOf`/`pqCodesOf`/`pqLutOf`) term by term on
-  * well-formed vectors — ascending dimension inside a distance, the
-  * (d, cid) argmin tie rule, LUT slots of dropped clusters left 0.0 — so
-  * scalar-vs-column parity, and therefore every DuckDB oracle
-  * (q52/q54/q55/q65/q66/q89), stays bit-exact.
+  * FP parity: every loop replicates, term by term on well-formed
+  * vectors, the independent scalar reference in `QuantExprSpec`
+  * (`refNearest`/`refCodes`/`refLut`, the math the ANN DuckDB oracles
+  * replay) — ascending dimension inside a distance, the (d, cid) argmin
+  * tie rule, LUT slots of dropped clusters left 0.0 — so scalar-vs-column
+  * parity, and therefore every DuckDB oracle (q52/q54/q55/q65/q66/q89),
+  * stays bit-exact.
   *
   * Null contract: a null vector, a null element (when the schema admits
   * them), or a PQ/residual/JL vector whose length contradicts the trained

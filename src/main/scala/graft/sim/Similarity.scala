@@ -234,7 +234,6 @@ object Similarity {
 
     val sample = sampleCorpus(c, math.max(nlist * 64, 1024), "neighbor_id", "ce")
     require(sample.nonEmpty, "ivfTopK: empty corpus")
-    val dim = sample.head.length
 
     val centroids = kmeansDriver(sample, nlist, iters)
 
@@ -320,29 +319,6 @@ object Similarity {
         java.util.Arrays.copyOfRange(v, j * dsub, (j + 1) * dsub)), ksub, iters)
     }
 
-  /** Per-subspace code assignment — first-min by (distance, code id). */
-  private def pqCodesOf(cbs: Array[Array[(Int, Array[Double])]], v: Array[Float],
-      m: Int, dsub: Int): Array[Int] =
-    Array.tabulate(m)(j => nearestCidOf(cbs(j),
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(
-        java.util.Arrays.copyOfRange(v, j * dsub, (j + 1) * dsub))))
-
-  /** LUT cell (j, ci) = ‖v_j − c_{j,ci}‖², inner loop in dimension order. */
-  private def pqLutOf(cbs: Array[Array[(Int, Array[Double])]], v: Array[Float],
-      m: Int, ksub: Int, dsub: Int): Array[Double] = {
-    val lut = new Array[Double](m * ksub)
-    var j = 0
-    while (j < m) {
-      cbs(j).foreach { case (ci, cv) =>
-        var d = 0.0
-        var i = 0
-        while (i < dsub) { val t = v(j * dsub + i).toDouble - cv(i); d += t * t; i += 1 }
-        lut(j * ksub + ci) = d
-      }
-      j += 1
-    }
-    lut
-  }
 
   /** ADC score Σⱼ lut[j·ksub + codes[j]] folded in subspace order from
     * 0.0 — the hottest kernel in the PQ family (it runs per CANDIDATE

@@ -36,7 +36,6 @@ object SparseCosine {
   def similarPairs(spark: SparkSession, docs: DataFrame, num: Long = 8L,
       den: Long = 10L, maxDf: Int = 64, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    import spark.implicits._
     require(num >= 0 && den > 0 && num <= den, s"threshold $num/$den")
     require(maxDf >= 2, s"maxDf=$maxDf")
     // fused codegen'd bigram loop (graft.text.GramExpr) — the
@@ -47,9 +46,8 @@ object SparseCosine {
         explode(graft.text.GramExpr.wordGrams(
           docs.sparkSession, col(textCol), 2)).as("term"))
       .groupBy(col("id"), col("term")).agg(count(lit(1)).as("tf"))
-      // referenced three times (norms, index, both pair sides); the
-      // ContextCleaner releases it once the result is unreachable
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // referenced three times (norms, index, both pair sides): cut once
+      .localCheckpoint(false)
     val norms = tf.groupBy(col("id")).agg(sum(col("tf") * col("tf")).as("nsq"))
     val okTerms = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .filter(col("df").between(2, maxDf)).select(col("term"))

@@ -824,7 +824,8 @@ object TextOps {
         .groupBy(col("s").as("lhs"), col("ns").as("rhs"))
         .agg(sum(col("freq")).as("cnt"))
     }
-    val before = pairsOf(syms).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // read by the max, the merge pick and the output: cut once
+    val before = pairsOf(syms).localCheckpoint(false)
     val mMax = before.agg(max(col("cnt")).as("mc"))
     val merge = before.crossJoin(broadcast(mMax))
       .filter(col("cnt") === col("mc"))
